@@ -220,6 +220,11 @@ def logreg_train(
             feat = feat.persist()
             out = spark.createDataFrame([], "b int, w_micro long")
             out._cached_deps = (feat, labels)  # noqa: SLF001
+            # empty artifacts: logreg_score_trained returns no rows
+            out.weights_map = {}
+            out.trained_features = spark.createDataFrame(
+                [], feat.join(labels, "id").schema
+            )
             if track_loss:
                 out.round_loss_micro = []
             return out

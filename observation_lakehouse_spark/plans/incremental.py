@@ -47,6 +47,7 @@ time-travelable like any table.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 from contextlib import contextmanager
@@ -74,6 +75,7 @@ def _refresh_width(
     spark: SparkSession,
     *frames: DataFrame | None,
     state: DataFrame | None = None,
+    files: list[str] = (),
 ) -> int:
     """Shuffle width for one refresh: ceil(input bytes /
     ``_REFRESH_BYTES_PER_PART`` = 1 MB), clamped to [1, defaultParallelism].
@@ -88,45 +90,39 @@ def _refresh_width(
     delta into a large state must not run the state∪delta union-agg at
     width 1): its bytes count toward the width, but its empty file list
     means a genuinely empty NEW view (0 bytes), not unknown.
+    ``files`` are further input files the refresh re-reads, counted as
+    given (a result-MV refresh passes the touched source partitions' files:
+    its recompute reads them whole, however small the delta).
     """
     par = spark.sparkContext.defaultParallelism
     cap = par * _REFRESH_BYTES_PER_PART
-    total = 0
 
-    def _add(df: DataFrame, empty_is_zero: bool) -> int | None:
-        """bytes of df's input files; None = unknown (fall back to par)."""
+    def _paths(df: DataFrame, empty_is_zero: bool) -> list[str] | None:
+        """df's input files; None = unknown (fall back to par)."""
         try:
-            files = df.inputFiles()
+            paths = df.inputFiles()
         except Exception:  # noqa: BLE001 — non-file sources
             return None
-        if not files and not empty_is_zero:
-            return None
-        b = 0
-        for f in files:
-            try:
-                b += os.stat(re.sub("^file:/+", "/", f)).st_size
-            except OSError:
-                return None
-            if b >= cap:
-                return b
-        return b
+        return paths if paths or empty_is_zero else None
 
-    for df in frames:
-        if df is None:
-            continue
-        b = _add(df, empty_is_zero=False)
-        if b is None:
+    # lazily listed, so a frame that already reaches the cap spares the
+    # (possibly large) state listing
+    listings = itertools.chain(
+        (_paths(df, False) for df in frames if df is not None),
+        (_paths(st, True) for st in [state] if st is not None),
+        [files],
+    )
+    total = 0
+    for paths in listings:
+        if paths is None:
             return par
-        total += b
-        if total >= cap:
-            return par
-    if state is not None:
-        b = _add(state, empty_is_zero=True)
-        if b is None:
-            return par
-        total += b
-        if total >= cap:
-            return par
+        for f in paths:
+            try:
+                total += os.stat(re.sub("^file:/+", "/", f)).st_size
+            except OSError:
+                return par
+            if total >= cap:
+                return par
     return max(1, min(par, -(-total // _REFRESH_BYTES_PER_PART)))
 
 

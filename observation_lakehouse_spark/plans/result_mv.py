@@ -1,26 +1,27 @@
 """Per-problem RESULT materialization: serve hot query families from a
 maintained table instead of planning a fresh aggregation per problem.
 
-The reference's hot loop re-runs its per-problem view query against the
-store on every lookup (semantics: /root/reference/benchmark_srm_output_view
-.py:38-71 — per-problem latency of a problem-scoped aggregation). On this
-engine that shape pays Spark's fixed per-query planning/scheduling floor
-(~100 ms) per problem — the one latency family DOMAIN_BENCH could not push
-under the reference's per-problem numbers through round 5. The Spark-first
-answer is to stop planning an aggregation per lookup: the three families are
-pure per-problem functions of per-problem data, so their results are
-materialized ONCE per (data_set_id, problem_id) partition and a lookup is a
-partition-pruned file read — a scan-only plan at the trivial-job floor.
+The reference's hot loop re-runs its per-problem view query on every lookup
+(benchmark_srm_output_view.py), paying Spark's per-query planning floor
+(~100 ms) per problem. The three families are pure per-problem functions of
+per-problem data, so their results are materialized ONCE per
+(data_set_id, problem_id) partition and a lookup is a scan-only plan.
 
-Maintenance is INCREMENTAL by construction: because each output row depends
-only on its own problem's input rows, an append touching problems P refreshes
-exactly the partitions P — computed from the partition-pruned source subset
-and written with dynamic partition overwrite (untouched partitions are never
-read or rewritten). At 100 TB this is the standard serving pattern: refresh
-cost tracks the append's problem set, lookups never re-aggregate, and the MV
-inherits the store's identity partitioning so pruning is static.
+Each MV is an :class:`~observation_lakehouse_spark.transaction.
+AtomicParquetTable` (the base tables' format), identity-partitioned on
+(data_set_id, problem_id) and created on the first refresh from the
+compute's output schema. Every refresh is ONE atomic commit: an incremental
+refresh recomputes the touched partitions from the partition-pruned source
+and swaps them in with a partition-replace commit (``commit_partitions`` —
+Iceberg overwrite-by-partition; a problem whose recompute is empty simply
+gets no files), ``refresh_full`` commits its output as the whole table.
+Readers therefore see one snapshot — a serve racing a refresh gets the old
+rows or the new ones, and a crash mid-refresh leaves the previous snapshot
+serving. ``serve`` scopes the read from the MANIFEST: Spark is handed only
+that partition's files, with the stored schema. Replaced files stay for the
+older snapshots until ``mv.table.expire_snapshots`` + ``mv.table.vacuum``.
 
-Consistency contract (pinned by tests/test_result_mv.py): after any sequence
+Consistency contract (checked by tests/test_result_mv.py): after any sequence
 of appends + matching ``refresh_problems`` calls, ``serve(ds, p)`` row-equals
 the direct operator on the full source — the ``incremental_mv`` equivalence,
 at result grain instead of aggregate grain.
@@ -31,6 +32,11 @@ from __future__ import annotations
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from observation_lakehouse_spark.transaction import (
+    AtomicParquetTable,
+    partition_values,
+)
 
 PARTITION_COLS = ("data_set_id", "problem_id")
 
@@ -61,13 +67,16 @@ def touched_partitions_filter(probs: list[tuple[str, str]]):
 
 
 class ProblemResultMV:
-    """A result table for one query family, identity-partitioned on
-    (data_set_id, problem_id).
+    """A result table for one query family (see the module doc).
 
     ``compute`` maps a source observations-shaped DataFrame to the family's
     result rows and MUST (a) emit the partition columns and (b) be
     per-problem local — every output row a function of input rows with the
     same (data_set_id, problem_id). All three reference families are.
+
+    ``table`` is the underlying :class:`AtomicParquetTable` (``None`` until
+    the first refresh writes it), so ``history`` / ``expire_snapshots`` /
+    ``vacuum`` apply to an MV exactly as to a base table.
     """
 
     def __init__(
@@ -75,46 +84,36 @@ class ProblemResultMV:
         spark: SparkSession,
         path: str,
         compute: Callable[[DataFrame], DataFrame],
-        files_per_partition: int = 1,
     ) -> None:
         self.spark = spark
         self.path = str(path)
         self.compute = compute
-        # 1 = the compacted single-file layout (cheapest footer/open cost).
-        # >1 shards each problem's rows across N files so a problem lookup
-        # decodes in N parallel tasks — pays off when the served row is WIDE
-        # (the three-way join's o.* + code + test payload) and decode, not
-        # the job floor, dominates.
-        self.files_per_partition = int(files_per_partition)
+        try:
+            self.table: AtomicParquetTable | None = AtomicParquetTable(
+                spark, self.path
+            )
+        except ValueError:  # nothing materialized here yet
+            self.table = None
 
-    def refresh_full(self, source: DataFrame) -> None:
-        """Recompute every partition (initial build / backfill)."""
-        self._write(self.compute(source))
-
-    def _write(self, out: DataFrame) -> None:
+    def _stage(self, out: DataFrame) -> list[str]:
+        if self.table is None:
+            self.table = AtomicParquetTable(
+                self.spark, self.path, schema=out.schema, partition_by=PARTITION_COLS
+            )
         # Repartition on the partition keys first: each task then writes a
         # handful of partition directories instead of every task holding an
         # open parquet writer (columnar buffers) for ALL of them — the
         # unclustered write OOMs a default-heap session at ~100 problems x
         # 32 tasks. Side effect is the serving layout we want anyway: ONE
-        # file per problem partition (the compacted interactive profile),
-        # or files_per_partition deterministic hash shards of it.
-        keys = [F.col(c) for c in PARTITION_COLS]
-        if self.files_per_partition > 1:
-            sharded = out.withColumn(
-                "_shard",
-                F.pmod(F.xxhash64(*out.columns), F.lit(self.files_per_partition)),
-            )
-            clustered = sharded.repartition(*keys, F.col("_shard")).drop("_shard")
-        else:
-            clustered = out.repartition(*keys)
-        clustered.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(*PARTITION_COLS).parquet(self.path)
-        self.spark.catalog.refreshByPath(self.path)
-        # a refresh invalidates any pinned copy — a pinned serve must never
-        # return pre-refresh rows; callers re-pin() to re-warm
-        self.unpin()
+        # file per problem partition.
+        return self.table.stage(out.repartition(*PARTITION_COLS))
+
+    def refresh_full(self, source: DataFrame) -> None:
+        """Recompute every partition (initial build / backfill) and commit
+        the output as the MV's entire contents: a partition absent from the
+        new output is dropped from the MV."""
+        files = self._stage(self.compute(source))
+        self.table.commit_replace(files)
 
     def refresh_problems(
         self, source: DataFrame, problems: Iterable[tuple[str, str]]
@@ -123,204 +122,109 @@ class ProblemResultMV:
 
         The source is partition-pruned to the touched problems before the
         family recomputes (per-problem locality makes that exact, not an
-        approximation), and the write is a dynamic partition overwrite —
-        untouched partitions are neither read nor rewritten."""
+        approximation), and one partition-replace commit swaps exactly those
+        partitions — untouched partitions are neither read nor rewritten."""
         probs = list(problems)
         if not probs:
             return
-        self._write(
+        files = self._stage(
             self.compute(source.filter(touched_partitions_filter(probs)))
         )
+        self.table.commit_partitions(files, probs)
+
+    def _refresh_touched(
+        self, source: DataFrame, delta: DataFrame
+    ) -> list[tuple[str, str]]:
+        """Refresh the partitions ``delta``'s rows name; returns them.
+
+        Delta-refresh scope: the touched-partition probe, the scoped
+        recompute and the stage write run with AQE off (AQE otherwise runs
+        each exchange as its own adaptive stage-job) at a width sized from
+        file bytes instead of the session width. The probe reads only the
+        delta; the recompute re-reads the touched source partitions WHOLE,
+        so its width also counts their files — a KB append into a GB
+        partition must not recompute at width 1. Non-file deltas fall back
+        to full parallelism (size unknown, not zero)."""
+        from observation_lakehouse_spark.plans.incremental import (
+            _refresh_scope,
+            _refresh_width,
+        )
+
+        with _refresh_scope(self.spark, _refresh_width(self.spark, delta)):
+            touched = [
+                (r["data_set_id"], r["problem_id"])
+                for r in delta.select(*PARTITION_COLS).distinct().collect()
+            ]
+        if touched:
+            width = _refresh_width(
+                self.spark, delta, files=_files_in_partitions(source, touched)
+            )
+            with _refresh_scope(self.spark, width):
+                self.refresh_problems(source, touched)
+        return touched
 
     def refresh_after_append(self, source: DataFrame, appended: DataFrame) -> None:
         """The append hook: refresh exactly the partitions the appended rows
         touch (their distinct (data_set_id, problem_id) pairs — a few rows
         collected, never data)."""
-        from observation_lakehouse_spark.plans.incremental import (
-            _refresh_scope,
-            _refresh_width,
-        )
-
-        # Delta-refresh scope (r12 judge #4 — the 5aa871d discipline): the
-        # touched-partition probe + scoped recompute + dynamic-overwrite
-        # write are all delta-sized; AQE otherwise runs each exchange as its
-        # own adaptive stage-job and the session width fans the tiny
-        # recompute out to near-empty tasks. Width derives from the
-        # appended batch's own files (non-file appends fall back to full
-        # parallelism — size unknown, not zero).
-        with _refresh_scope(
-            self.spark, _refresh_width(self.spark, appended)
-        ):
-            touched = [
-                (r["data_set_id"], r["problem_id"])
-                for r in appended.select(*PARTITION_COLS).distinct().collect()
-            ]
-            self.refresh_problems(source, touched)
+        self._refresh_touched(source, appended)
 
     def refresh_from_change_feed(
         self,
-        source_table,
+        source_table: AtomicParquetTable,
         from_version: int,
         to_version: int | None = None,
     ) -> list[tuple[str, str]]:
-        """The DELETE/UPDATE hook (r10 judge #8): maintain the served result
-        table under row-level changes on an :class:`~observation_lakehouse_
-        spark.transaction.AtomicParquetTable` source WITHOUT a full rebuild.
+        """The DELETE/UPDATE hook: maintain the served result table under
+        row-level changes on an :class:`AtomicParquetTable` source WITHOUT a
+        full rebuild.
 
-        The table's change feed (:meth:`read_change_feed` — insert AND
-        retraction rows, both carrying the partition columns) names exactly
-        the (data_set_id, problem_id) partitions any change touched; those
-        partitions recompute from the POST-change snapshot (per-problem
-        locality makes partition-scoped recompute the exact result-grain
-        analogue of the counting algorithm — a result row is not an
-        invertible aggregate, so "subtract the delta" has no meaning here,
-        but "recompute the touched partition" is just as incremental:
-        refresh cost tracks the change's problem set, untouched partitions
-        are neither read nor rewritten). Returns the touched pairs."""
-        from observation_lakehouse_spark.plans.incremental import (
-            _refresh_scope,
-            _refresh_width,
-        )
-
+        The table's change feed (:meth:`~AtomicParquetTable.
+        read_change_feed` — insert AND retraction rows, both carrying the
+        partition columns) names exactly the (data_set_id, problem_id)
+        partitions any change touched; those partitions recompute from the
+        POST-change snapshot (per-problem locality makes partition-scoped
+        recompute the exact result-grain analogue of the counting algorithm
+        — a result row is not an invertible aggregate, so "subtract the
+        delta" has no meaning here, but "recompute the touched partition" is
+        just as incremental). A delete that emptied a problem recomputes to
+        no rows, so the partition-replace commit leaves it with no files.
+        Returns the touched pairs."""
         feed = source_table.read_change_feed(from_version, to_version)
-        # Delta-refresh scope (r12 judge #4 — the 5aa871d discipline): the
-        # feed probe, the partition-scoped recompute + dynamic-overwrite
-        # write, and the live-partition probe are all feed-sized actions;
-        # AQE otherwise runs each exchange of each as its own adaptive
-        # stage-job, and the session width fans the touched-partition
-        # recompute out to near-empty tasks. Width derives from the feed's
-        # own files — scale-adaptive, a TB-sized feed still uses every core.
-        with _refresh_scope(self.spark, _refresh_width(self.spark, feed)):
-            touched = [
-                (r["data_set_id"], r["problem_id"])
-                for r in feed.select(*PARTITION_COLS).distinct().collect()
-            ]
-            self.refresh_problems(source_table.read(), touched)
-            # Dynamic partition overwrite only rewrites partitions PRESENT in
-            # the recomputed output — a delete that emptied a whole problem
-            # would leave its stale files behind. Drop touched partitions
-            # that no longer exist in the source.
-            if touched:
-                import shutil
-                from pathlib import Path as _P
+        return self._refresh_touched(source_table.read(), feed)
 
-                # partition-pruned: only the touched problems' files are read
-                live = {
-                    (r["data_set_id"], r["problem_id"])
-                    for r in source_table.read()
-                    .filter(touched_partitions_filter(touched))
-                    .select(*PARTITION_COLS)
-                    .distinct()
-                    .collect()
-                }
-                dropped = False
-                for ds, p in touched:
-                    if (ds, p) in live:
-                        continue
-                    part_dir = _P(
-                        f"{self.path}/data_set_id={self._esc(ds)}"
-                        f"/problem_id={self._esc(p)}"
-                    )
-                    if part_dir.exists():
-                        shutil.rmtree(part_dir, ignore_errors=True)
-                        dropped = True
-                if dropped:
-                    self.spark.catalog.refreshByPath(self.path)
-                    self.unpin()
-        return touched
+    def _built(self) -> AtomicParquetTable:
+        if self.table is None:
+            raise ValueError(
+                f"no result MV materialized at {self.path}; run refresh_full first"
+            )
+        return self.table
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
-    def pin(self, n_batches: int = 1) -> None:
-        """Pin the result table in executor memory — the hot-serving
-        configuration: lookups become InMemoryTableScan over cached columnar
-        batches, no file open or parquet decode on the lookup path.
-
-        The table is COALESCED to ``n_batches`` cache partitions first: a
-        raw read carries one RDD partition per table partition, and a
-        pinned lookup then launches that many near-empty tasks per query —
-        fine on an idle box, but each task is a scheduler round trip, so
-        under load the task fan-out DOMINATES (measured: pinned lookups
-        slower than the cold single-file read on a busy host). One batch =
-        one task scanning a few thousand columnar rows — microseconds —
-        and the task count is independent of how many problems the table
-        holds. Size ``n_batches`` so each batch stays a few MB when the
-        result table is large (per-batch min/max pruning re-engages across
-        batches).
-
-        Refreshes unpin (``_write`` invalidates), so a pinned serve never
-        returns stale rows; call ``pin()`` again after a refresh to
-        re-warm. The cold path (partition-directory read) remains the
-        general case."""
-        self.unpin()
-        self._pinned = self.read().coalesce(max(1, int(n_batches))).persist()
-        self._pinned.count()  # materialize now, not on the first lookup
-
-    def unpin(self) -> None:
-        pinned = getattr(self, "_pinned", None)
-        if pinned is not None:
-            pinned.unpersist(blocking=True)
-        self._pinned = None
+        """The whole MV at its latest snapshot."""
+        return self._built().read()
 
     def serve(self, data_set_id: str, problem_id: str) -> DataFrame:
         """One problem's materialized result: a scan-only plan — no
-        aggregation, no join, no exchange.
+        aggregation, no join, no exchange — over exactly that partition's
+        files, picked from the latest snapshot's manifest. A problem with no
+        materialized rows returns an empty frame with the MV schema."""
+        return self._built().read(partitions=[(data_set_id, problem_id)])
 
-        Pruning is by PATH, not by filter: the lookup reads the problem's
-        partition DIRECTORY directly (``basePath`` keeps the partition
-        columns in the schema, same column order as a root read), so the
-        plan's file index holds one partition instead of the whole table's
-        — the key-value-store serving shape, measured ~10 ms under the
-        filter-pruned root scan on the 100-problem corpus (the scan work is
-        identical; the saving is plan/iterator overhead proportional to the
-        table's partition count, which a 100 TB table has a lot of). A
-        problem with no materialized partition returns an empty frame with
-        the table schema, matching the old filter semantics. When the table
-        is pinned (:meth:`pin`), the lookup filters the cached frame
-        instead — same rows, no file IO."""
-        pinned = getattr(self, "_pinned", None)
-        if pinned is not None:
-            return pinned.where(
-                (F.col("data_set_id") == data_set_id)
-                & (F.col("problem_id") == problem_id)
-            )
-        part_dir = (
-            f"{self.path}/data_set_id={self._esc(data_set_id)}"
-            f"/problem_id={self._esc(problem_id)}"
-        )
-        from pathlib import Path as _P
 
-        if not _P(part_dir).exists():
-            # Missing directory (key never materialized — or the path check
-            # cannot see it: non-local filesystem, or an escape mismatch):
-            # fall back to the FILTER-pruned root scan, which is correct for
-            # all three cases — partition pruning still keeps it to one
-            # partition's files, just through the table-root file index
-            # (r7 advice: the old empty-frame return silently dropped rows
-            # for any of the latter two).
-            return self.read().where(
-                (F.col("data_set_id") == data_set_id)
-                & (F.col("problem_id") == problem_id)
-            )
-        return self.spark.read.option("basePath", self.path).parquet(part_dir)
-
-    @staticmethod
-    def _esc(v: str) -> str:
-        """Hive partition-directory escaping for the characters Spark's
-        writer escapes — the full ESCAPE_CHARS set of
-        ExternalCatalogUtils/Hive FileUtils, INCLUDING the control range
-        0x00–0x1F (r7 advice: omitting those made serve() compute a
-        non-existent dir for ids containing one; the root-scan fallback
-        above now also covers any residual mismatch)."""
-        out = []
-        for ch in v:
-            out.append(
-                f"%{ord(ch):02X}"
-                if (ord(ch) < 0x20 or ch in '"#%\'*/:=?\\\x7f{[]^')
-                else ch
-            )
-        return "".join(out)
+def _files_in_partitions(
+    df: DataFrame, probs: list[tuple[str, str]]
+) -> list[str]:
+    """``df``'s input files that lie in the given (data_set_id, problem_id)
+    partitions, matched on their decoded ``k=v`` directories — no job. A
+    filtered frame's ``inputFiles()`` is the UNPRUNED listing, so the
+    selection is by path here."""
+    wanted = set(probs)
+    return [
+        f
+        for f in df.inputFiles()
+        if tuple(partition_values(f).get(c) for c in PARTITION_COLS) in wanted
+    ]
 
 
 def srm_map_mv_compute(observations: DataFrame) -> DataFrame:

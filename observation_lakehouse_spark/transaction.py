@@ -46,9 +46,31 @@ import os
 import shutil
 import uuid
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_values(path: str) -> dict[str, str | None]:
+    """``{column: value}`` of a data-file path's ``k=v`` partition
+    directories, with the ``%XX`` escapes Spark's partitioned writer applies
+    undone and ``__HIVE_DEFAULT_PARTITION__`` read as ``None``. Works on
+    manifest-relative paths and on absolute ``inputFiles()`` URIs alike (a
+    later ``k=v`` directory wins). This is the table format's one decoder of
+    partition directories: partition-replace commits and partition-scoped
+    reads match files through it, never through re-encoded directory
+    names."""
+    out: dict[str, str | None] = {}
+    for part in path.split("/")[:-1]:
+        key, eq, raw = part.partition("=")
+        if eq:
+            # Spark escapes only ASCII characters, so URL unquoting undoes it
+            out[key] = None if raw == _HIVE_NULL else unquote(raw)
+    return out
 
 
 class CommitConflict(RuntimeError):
@@ -340,6 +362,43 @@ class AtomicParquetTable:
             [], idempotency_key, replace_files=list(files), expected_version=expected_version
         )
 
+    def _partition_key(self, values) -> tuple:
+        """One partition as the tuple :func:`partition_values` yields for it,
+        in ``partition_by`` order (values compare in their string form)."""
+        values = tuple(values)
+        if len(values) != len(self.partition_by):
+            raise ValueError(
+                f"partition {values!r} does not name one value per partition "
+                f"column {self.partition_by}"
+            )
+        return tuple(None if v is None else str(v) for v in values)
+
+    def _file_partition(self, rel: str) -> tuple:
+        pv = partition_values(rel)
+        return tuple(pv.get(c) for c in self.partition_by)
+
+    def commit_partitions(self, files: list[str], partitions) -> int:
+        """Replace whole partitions in one commit — Iceberg's
+        overwrite-by-partition / Delta's ``replaceWhere``: the head's files
+        in ``partitions`` (one value tuple per partition, ``partition_by``
+        order) are dropped and ``files`` (from :meth:`stage`) added. A named
+        partition that ``files`` leave empty simply disappears; every other
+        partition carries over untouched. The drop is re-derived from the
+        head on every attempt of the commit loop, so a concurrent commit to
+        any partition is rebased onto, never lost. Staged files outside the
+        named partitions raise (they would duplicate rows the replace keeps).
+        """
+        if not self.partition_by:
+            raise ValueError("commit_partitions needs a partitioned table")
+        replaced = {self._partition_key(p) for p in partitions}
+        stray = [f for f in files if self._file_partition(f) not in replaced]
+        if stray:
+            raise ValueError(
+                f"{len(stray)} staged file(s) lie outside the replaced "
+                f"partitions, e.g. {stray[0]}"
+            )
+        return self._commit(list(files), None, drop_partitions=replaced)
+
     def _collect_stats(self, files: list[str]) -> dict[str, dict[str, list]]:
         """Per-file column [min, max] from parquet footers, for data skipping.
 
@@ -577,19 +636,7 @@ class AtomicParquetTable:
             keep.append(f)
         from pyspark.sql import functions as F
 
-        if not keep:
-            return self.spark.createDataFrame([], self.schema)
-        cols = [f.name for f in self.schema.fields]
-        if m.get("deletes"):
-            base = self._apply_deletes(self._read_with_pos(keep), m).select(cols)
-        else:
-            base = (
-                self.spark.read.schema(self.schema)
-                .option("basePath", str(self.data_dir))
-                .parquet(*[str(self.data_dir / f) for f in keep])
-                .select(cols)
-            )
-        return base.filter(F.col(column) == F.lit(value))
+        return self._scan_files(keep, m).filter(F.col(column) == F.lit(value))
 
     # -- row-level deletes (position deletion vectors) -------------------------
 
@@ -1077,6 +1124,7 @@ class AtomicParquetTable:
         expected_version: int | None = None,
         add_deletes: dict[str, list[str]] | None = None,
         replace_deletes: dict[str, list[str]] | None = None,
+        drop_partitions: set[tuple] | None = None,
     ) -> int:
         import time
 
@@ -1102,7 +1150,15 @@ class AtomicParquetTable:
                     "re-read and re-derive the replacement"
                 )
             next_v = head_v + 1
-            files = replace_files if replace_files is not None else head["files"] + new_files
+            if replace_files is not None:
+                files = replace_files
+            elif drop_partitions is not None:
+                files = [
+                    f for f in head["files"]
+                    if self._file_partition(f) not in drop_partitions
+                ] + new_files
+            else:
+                files = head["files"] + new_files
             parent_stats = head.get("stats", {})
             parent_blooms = head.get("blooms", {})
             # Deletion vectors: explicit replace_deletes wins (rollback/
@@ -1154,7 +1210,12 @@ class AtomicParquetTable:
 
     # -- reads ----------------------------------------------------------------
 
-    def read(self, version: int | None = None, ref: str | None = None) -> DataFrame:
+    def read(
+        self,
+        version: int | None = None,
+        ref: str | None = None,
+        partitions=None,
+    ) -> DataFrame:
         """Snapshot read (latest by default; pass ``version`` to time-travel,
         or ``ref`` to read a named tag/branch — Iceberg's ``VERSION AS OF``
         by name).
@@ -1163,6 +1224,11 @@ class AtomicParquetTable:
         uncommitted/orphan files are never seen. ``basePath`` keeps the hive
         partition directories parsed as columns, so partition pruning still
         applies; the explicit schema keeps their declared types.
+
+        ``partitions`` (value tuples in ``partition_by`` order) scopes the
+        read from the manifest: Spark is handed only those partitions' files,
+        so the plan's file index never holds the rest of the table. No
+        matching file returns the empty frame with the table schema.
         """
         if ref is not None:
             if version is not None:
@@ -1171,11 +1237,19 @@ class AtomicParquetTable:
         v = self.latest_version() if version is None else version
         m = self._manifest(v)
         files = m["files"]
+        if partitions is not None:
+            wanted = {self._partition_key(p) for p in partitions}
+            files = [f for f in files if self._file_partition(f) in wanted]
+        return self._scan_files(files, m)
+
+    def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
+        """Scan exactly ``files`` (``manifest``'s deletion vectors applied),
+        columns in schema order; no files gives the empty frame."""
         if not files:
             return self.spark.createDataFrame([], self.schema)
         cols = [f.name for f in self.schema.fields]
-        if m.get("deletes"):
-            return self._live_rows(m).select(cols)
+        if manifest.get("deletes"):
+            return self._apply_deletes(self._read_with_pos(files), manifest).select(cols)
         reader = self.spark.read.schema(self.schema).option("basePath", str(self.data_dir))
         return reader.parquet(*[str(self.data_dir / f) for f in files]).select(cols)
 
@@ -1219,18 +1293,7 @@ class AtomicParquetTable:
                 except TypeError:
                     pass
             keep.append(f)
-        cols = [f.name for f in self.schema.fields]
-        if not keep:
-            df = self.spark.createDataFrame([], self.schema)
-        elif m.get("deletes"):
-            df = self._apply_deletes(self._read_with_pos(keep), m).select(cols)
-        else:
-            df = (
-                self.spark.read.schema(self.schema)
-                .option("basePath", str(self.data_dir))
-                .parquet(*[str(self.data_dir / f) for f in keep])
-                .select(cols)
-            )
+        df = self._scan_files(keep, m)
         from pyspark.sql import functions as F
 
         if lower is not None:
@@ -1278,15 +1341,8 @@ class AtomicParquetTable:
                     "snapshot reads instead"
                 )
             prev_files = cur_files
-        added = [f for f in target if f not in base]
-        if not added:
-            return self.spark.createDataFrame([], self.schema)
-        return (
-            self.spark.read.schema(self.schema)
-            .option("basePath", str(self.data_dir))
-            .parquet(*[str(self.data_dir / f) for f in added])
-            .select([f.name for f in self.schema.fields])
-        )
+        # as appended: the target's deletion vectors are not applied
+        return self._scan_files([f for f in target if f not in base], {})
 
     def read_change_feed(
         self, since_version: int, to_version: int | None = None

@@ -316,13 +316,14 @@ def main() -> None:
             (time.perf_counter() - t0) * 1000 / n_problems, 2
         )
 
-    # Served-from-MV profile (VERDICT r5 #2): per-problem results maintained
-    # as an identity-partitioned result table (plans/result_mv.ProblemResultMV
-    # — incremental refresh on append, consistency pinned by
-    # tests/test_result_mv.py), so a lookup is a partition-pruned SCAN of
-    # precomputed rows — no aggregation, no join, no exchange. This is the
-    # serving architecture for the interactive loop: the per-query planner
-    # floor still applies, but the data path is a one-file read.
+    # Served-from-MV profile: per-problem results maintained as an
+    # identity-partitioned atomic result table (plans/result_mv.
+    # ProblemResultMV — incremental partition-replace refresh on append,
+    # consistency checked by tests/test_result_mv.py), so a lookup is a scan
+    # of one problem's precomputed rows, picked from the MV manifest — no
+    # aggregation, no join, no exchange. This is the serving architecture
+    # for the interactive loop: the per-query planner floor still applies,
+    # but the data path is a one-file read.
     from observation_lakehouse_spark.plans.result_mv import (
         ProblemResultMV,
         clustering_mv_compute,
@@ -337,12 +338,8 @@ def main() -> None:
         "behavioral_clustering": ProblemResultMV(
             spark, f"{root}/mv_clu", clustering_mv_compute
         ),
-        # the join's served row is WIDE (o.* + code + test payload): shard
-        # each problem across 4 files so the lookup decodes in parallel
-        # tasks (~40 -> ~20 ms of decode under load; floor unchanged)
         "three_way_join": ProblemResultMV(
-            spark, f"{root}/mv_twj", three_way_join_mv_compute(code, tst),
-            files_per_partition=4,
+            spark, f"{root}/mv_twj", three_way_join_mv_compute(code, tst)
         ),
     }
     mv_build_ms: dict[str, float] = {}
@@ -351,8 +348,7 @@ def main() -> None:
         mv.refresh_full(obs)
         mv_build_ms[name] = round((time.perf_counter() - t0) * 1000 / n_problems, 2)
 
-    # interactive read profile again: a pruned MV partition is one file (or
-    # a few shards — split them into separate tasks instead of bin-packing)
+    # interactive read profile again: a served MV partition is one file
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 * 1024))
@@ -372,25 +368,7 @@ def main() -> None:
             lat.append((time.perf_counter() - t0) * 1000)
         return round(statistics.median(lat), 1)
 
-    # cold path: partition-DIRECTORY read (pruning by path, no file index
-    # over the whole table) — the general serving case
-    served_cold = {name: _serve_p50(mv) for name, mv in mvs.items()}
-    # hot path: MV pinned in executor memory (ProblemResultMV.pin) — the
-    # lookup is an InMemoryTableScan over cached columnar batches with
-    # min/max batch pruning, no file open/decode. This is the serving tier
-    # a deployment runs for its hot problem set; refreshes invalidate the
-    # pin, so consistency is unchanged (pinned serve ≡ direct operator is
-    # pinned by tests/test_result_mv.py). Pin the NARROW result families
-    # only: the three-way join's served row is wide (o.* + code + test
-    # payload), and scanning its cached batches measured SLOWER than the
-    # 4-shard direct-directory file read (112 vs 85 ms) — wide payloads
-    # stay on the sharded cold path by design.
-    served: dict[str, float] = {}
-    for name, mv in mvs.items():
-        if name != "three_way_join":
-            mv.pin()
-        served[name] = _serve_p50(mv)
-        mv.unpin()
+    served = {name: _serve_p50(mv) for name, mv in mvs.items()}
 
     try:
         import subprocess
@@ -425,8 +403,7 @@ def main() -> None:
         "batch_serving_amortized_ms_per_problem": batch_ms,
         # result-MV serving: lookup = pruned scan of maintained results;
         # build cost amortized per problem (one-off / incremental on append)
-        "served_from_mv_p50_ms": served,  # pinned (hot-serving tier)
-        "served_from_mv_cold_p50_ms": served_cold,  # partition-dir file read
+        "served_from_mv_p50_ms": served,  # manifest-scoped file read
         "mv_build_amortized_ms_per_problem": mv_build_ms,
         "reference_baseline_ms": {
             "srm_output_view": 53.2,

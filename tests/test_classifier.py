@@ -93,6 +93,22 @@ def test_bias_and_zero_feature_docs(spark):
     assert sc[1] > 500_000  # positive class confidently above threshold
 
 
+def test_empty_labeled_corpus_scores_empty(spark):
+    """No labeled docs: training returns no weights, and the same-session
+    scorer returns an empty (id, score_micro, y) frame instead of raising."""
+    from observation_lakehouse_spark.operators.classifier import (
+        logreg_score_trained,
+    )
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    w = logreg_train(hashed_token_features(docs), quality_labels(docs), n_rounds=2)
+    assert w.collect() == []
+    scored = logreg_score_trained(w)
+    assert scored.columns == ["id", "score_micro", "y"]
+    assert scored.collect() == []
+    release_cached(w)
+
+
 def test_rejects_bad_round_count(spark, docs):
     with pytest.raises(ValueError, match="n_rounds"):
         logreg_train(

@@ -280,6 +280,44 @@ def test_minmax_retraction_equals_full_recompute(spark, tmp_path):
     """End-to-end equivalence under interleaved appends/deletes/updates:
     the candidate-state MV equals a one-shot GROUP BY with MIN/MAX over
     the post-change source after every feed."""
+    _assert_retractions_match_recompute(
+        spark, tmp_path, _mk_minmax(spark, tmp_path / "mv2", k=3), F.col("v")
+    )
+
+
+def test_minmax_retraction_mixed_types_equals_full_recompute(
+    spark, tmp_path, monkeypatch
+):
+    """MIN/MAX columns of DIFFERENT storage types (double lo, decimal hi)
+    cannot share the tagged frontier fold and take the per-column one; it
+    must equal the one-shot recompute just the same."""
+    per_column = IncrementalAggregate._fold_frontiers_per_column
+    calls = []
+
+    def spy(self, *args):
+        calls.append(1)
+        return per_column(self, *args)
+
+    monkeypatch.setattr(IncrementalAggregate, "_fold_frontiers_per_column", spy)
+    mv = IncrementalAggregate(
+        spark,
+        str(tmp_path / "mv3"),
+        keys=["k"],
+        aggs={
+            "n": ("count", "1"),
+            "lo": ("min", "v"),
+            "hi": ("max", "CAST(v AS DECIMAL(38,6))"),
+        },
+        agg_types={"lo": "double", "hi": "decimal(38,6)"},
+        extrema_k=3,
+    )
+    _assert_retractions_match_recompute(
+        spark, tmp_path, mv, F.col("v").cast("decimal(38,6)")
+    )
+    assert calls  # the per-column fold really ran
+
+
+def _assert_retractions_match_recompute(spark, tmp_path, mv, hi_expr):
     from pyspark.sql.types import _parse_datatype_string
 
     from observation_lakehouse_spark.transaction import AtomicParquetTable
@@ -288,7 +326,6 @@ def test_minmax_retraction_equals_full_recompute(spark, tmp_path):
         spark, str(tmp_path / "src2"),
         schema=_parse_datatype_string("k string, v double"),
     )
-    mv = _mk_minmax(spark, tmp_path / "mv2", k=3)
     rows = [(f"k{i % 4}", float((i * 37) % 100)) for i in range(60)]
     src.append(spark.createDataFrame(rows, "k string, v double"))
     last_v = src.latest_version()
@@ -319,7 +356,7 @@ def test_minmax_retraction_equals_full_recompute(spark, tmp_path):
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min("v").alias("lo"),
-                F.max("v").alias("hi"),
+                F.max(hi_expr).alias("hi"),
             )
             .collect()
         }

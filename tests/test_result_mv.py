@@ -1,13 +1,14 @@
 """Consistency contract of the per-problem result MV (plans/result_mv.py):
 after a full build — and after appends + INCREMENTAL refresh — serving a
 problem from the MV row-equals running the direct operator on the full
-source, for all three reference families; and the incremental refresh never
-rewrites untouched partitions (verified on the files themselves)."""
+source, for all three reference families; the incremental refresh never
+rewrites untouched partitions (verified on the head manifest's files);
+and every refresh is one atomic commit — a serve racing a refresh reads
+one snapshot, a crashed refresh leaves the previous one serving."""
 
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from observation_lakehouse_spark.plans.result_mv import (
     three_way_join_mv_compute,
 )
 from observation_lakehouse_spark.schemas import OBSERVATIONS_SCHEMA
+from observation_lakehouse_spark.transaction import partition_values
 
 from .conftest import FIXED_TS, N_PROBLEMS
 
@@ -78,6 +80,17 @@ def mv_setup(spark, observations, code_implementations, tests_table, tmp_path):
     return mvs
 
 
+def _head_files(mv, pid):
+    """(path, mtime, size) of each file the MV's head manifest lists for
+    DSA/pid — the files serve() would read."""
+    head = mv.table._manifest(mv.table.latest_version())["files"]
+    return sorted(
+        (f, os.stat(mv.table.data_dir / f).st_mtime_ns, os.stat(mv.table.data_dir / f).st_size)
+        for f in head
+        if partition_values(f) == {"data_set_id": "DSA", "problem_id": pid}
+    )
+
+
 def _direct(name, observations, code_implementations, tests_table, pid):
     if name == "srm":
         return srm_output_map(observations, problem_id=pid, data_set_id="DSA")
@@ -121,19 +134,13 @@ def test_incremental_refresh_after_append(
     appended = spark.createDataFrame(_appended_rows(), OBSERVATIONS_SCHEMA)
     source2 = observations.unionByName(appended)
 
-    # untouched-partition isolation: p_000's files must not be rewritten
-    def p000_stat(mv):
-        base = Path(mv.path) / "data_set_id=DSA" / "problem_id=p_000"
-        return sorted(
-            (f.name, os.stat(f).st_mtime_ns)
-            for f in base.glob("*.parquet")
-        )
-
-    before = {n: p000_stat(mv) for n, mv in mv_setup.items()}
+    # untouched-partition isolation: the head manifest lists the SAME p_000
+    # files before and after, and those files were not rewritten
+    before = {n: _head_files(mv, "p_000") for n, mv in mv_setup.items()}
     for mv in mv_setup.values():
         mv.refresh_after_append(source2, appended)
-    after = {n: p000_stat(mv) for n, mv in mv_setup.items()}
-    assert before == after  # dynamic overwrite left p_000 alone
+    after = {n: _head_files(mv, "p_000") for n, mv in mv_setup.items()}
+    assert before == after  # the partition replace left p_000 alone
     assert all(before[n] for n in before)  # ...and it actually has files
 
     # served results equal direct queries on the post-append source for the
@@ -144,6 +151,104 @@ def test_incremental_refresh_after_append(
     )
 
 
+@pytest.fixture()
+def srm_mv(spark, observations, tmp_path):
+    mv = ProblemResultMV(spark, str(tmp_path / "srm_only"), srm_map_mv_compute)
+    mv.refresh_full(observations)
+    return mv
+
+
+def test_serve_built_before_refresh_reads_its_snapshot(
+    spark, observations, srm_mv
+):
+    """A serve() frame is bound to the snapshot it was built from: collected
+    after a refresh replaced its partition it still returns exactly the
+    pre-refresh rows (the replaced files stay until vacuum), while a fresh
+    serve() returns the post-refresh rows."""
+    mv = srm_mv
+    early = mv.serve("DSA", "p_001")
+    pre = rows_of(mv.serve("DSA", "p_001"))
+    appended = spark.createDataFrame(_appended_rows(), OBSERVATIONS_SCHEMA)
+    source2 = observations.unionByName(appended)
+    mv.refresh_after_append(source2, appended)
+    assert rows_of(early) == pre
+    post = rows_of(mv.serve("DSA", "p_001"), drop=("data_set_id", "problem_id"))
+    assert post != rows_of(early, drop=("data_set_id", "problem_id"))
+    assert post == rows_of(
+        srm_output_map(source2, problem_id="p_001", data_set_id="DSA"),
+        drop=("data_set_id", "problem_id"),
+    )
+
+
+def test_crashed_refresh_leaves_previous_rows_serving(
+    spark, observations, code_implementations, tests_table, srm_mv
+):
+    """A refresh that dies after staging part of its files, before its
+    commit, changes nothing a reader sees; the next refresh succeeds."""
+    mv = srm_mv
+    pre = rows_of(mv.serve("DSA", "p_001"))
+    appended = spark.createDataFrame(_appended_rows(), OBSERVATIONS_SCHEMA)
+    source2 = observations.unionByName(appended)
+    mv.table._test_fail_before = "commit"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        mv.refresh_after_append(source2, appended)
+    assert rows_of(mv.serve("DSA", "p_001")) == pre
+    assert mv.serve("DSA", "p_900").count() == 0
+    mv.table._test_fail_before = None
+    mv.refresh_after_append(source2, appended)
+    _assert_serve_matches(
+        {"srm": mv}, source2, code_implementations, tests_table, ["p_001", "p_900"]
+    )
+
+
+def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
+    """A tiny append into a LARGE partition recomputes that whole partition,
+    so its refresh width is sized from the partition's files, not the
+    delta's; a tiny append into a tiny partition stays at width 1."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from observation_lakehouse_spark.transaction import AtomicParquetTable
+
+    src = AtomicParquetTable(
+        spark,
+        str(tmp_path / "src"),
+        schema=_parse_datatype_string(
+            "data_set_id string, problem_id string, output string"
+        ),
+        partition_by=("data_set_id", "problem_id"),
+    )
+
+    def rows(pid, lo, n):
+        # hex digests barely compress: ~64 bytes per row on disk
+        return spark.range(lo, lo + n).select(
+            F.lit("DSA").alias("data_set_id"),
+            F.lit(pid).alias("problem_id"),
+            F.sha2(F.col("id").cast("string"), 256).alias("output"),
+        )
+
+    src.append(rows("p_big", 0, 40_000).unionByName(rows("p_small", 0, 10)))
+    widths = []
+
+    def compute(df):
+        widths.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        return df.groupBy("data_set_id", "problem_id").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+
+    mv = ProblemResultMV(spark, str(tmp_path / "mv"), compute)
+    mv.refresh_full(src.read())
+    for pid, expect_wide in (("p_big", True), ("p_small", False)):
+        v = src.latest_version()
+        src.append(rows(pid, 10**6, 1))
+        widths.clear()
+        mv.refresh_after_append(src.read(), src.read_changes(v))
+        assert len(widths) == 1 and (widths[0] > 1) == expect_wide, (pid, widths)
+    assert {r["problem_id"]: r["n"] for r in mv.read().collect()} == {
+        "p_big": 40_001,
+        "p_small": 11,
+    }
+
+
 def test_refresh_problems_empty_is_noop(spark, observations, mv_setup):
     mv = mv_setup["srm"]
     before = rows_of(mv.read())
@@ -151,35 +256,13 @@ def test_refresh_problems_empty_is_noop(spark, observations, mv_setup):
     assert rows_of(mv.read()) == before
 
 
-def test_pinned_serve_matches_and_refresh_invalidates(
-    spark, observations, code_implementations, tests_table, mv_setup
-):
-    """pin() must not change served rows, and a refresh must invalidate the
-    pin (a pinned serve may never return pre-refresh state)."""
-    for mv in mv_setup.values():
-        mv.pin()
-    _assert_serve_matches(
-        mv_setup, observations, code_implementations, tests_table, ["p_000", "p_001"]
-    )
-    # refresh invalidates the pin (a pinned serve may never go stale)
-    for mv in mv_setup.values():
-        assert getattr(mv, "_pinned", None) is not None
-    mv = mv_setup["srm"]
-    mv.refresh_problems(observations, [("DSA", "p_000")])
-    assert getattr(mv, "_pinned", None) is None  # pin dropped on write
-    for m in mv_setup.values():
-        m.unpin()
-
-
 def test_serve_missing_key_and_escape_fallback(spark, observations, mv_setup):
-    """r7 advice: (a) ids containing writer-escaped characters — including
-    the 0x00-0x1F control range _esc previously omitted — must still serve
-    their rows; (b) a genuinely absent problem returns empty (the
-    filter-pruned root-scan fallback, not a phantom)."""
-    from observation_lakehouse_spark.plans.result_mv import ProblemResultMV
-
+    """(a) ids containing writer-escaped characters — including the
+    0x00-0x1F control range — must still serve their rows; (b) a genuinely
+    absent problem returns an empty frame with the MV's columns, not a
+    phantom and not an error."""
     mv = mv_setup["srm"]
-    # absent key: fallback scans the root with filters -> empty, same schema
+    # absent key: no manifest file matches -> empty, same columns
     absent = mv.serve("DSA", "p_does_not_exist")
     assert absent.count() == 0
     assert absent.columns == mv.serve("DSA", "p_000").columns
@@ -221,30 +304,24 @@ def test_refresh_from_change_feed_scoped_and_drops_empty(spark, observations, tm
     mv = ProblemResultMV(spark, str(tmp_path / "srm_mv2"), srm_map_mv_compute)
     mv.refresh_full(src.read())
 
-    def part_files(pid):
-        d = Path(mv.path) / "data_set_id=DSA" / f"problem_id={pid}"
-        return sorted(
-            (p.name, p.stat().st_mtime_ns, p.stat().st_size)
-            for p in d.glob("*.parquet")
-        ) if d.exists() else None
-
-    untouched_before = part_files("p_001")
+    untouched_before = _head_files(mv, "p_001")
+    assert untouched_before
     # delete ONE implementation from p_000, and ALL of p_002
     src.delete_where("problem_id = 'p_000' AND implementation_id LIKE 'impl_00%'")
     src.delete_where("problem_id = 'p_002'")
     touched = mv.refresh_from_change_feed(src, v1)
     assert {p for _, p in touched} == {"p_000", "p_002"}
 
-    # untouched partition: bit-identical files (not rewritten, not dropped)
-    assert part_files("p_001") == untouched_before
+    # untouched partition: the same files, not rewritten, not dropped
+    assert _head_files(mv, "p_001") == untouched_before
     # touched partition: serves the post-delete recompute
     served = mv.serve("DSA", "p_000")
     direct = srm_output_map(src.read(), problem_id="p_000", data_set_id="DSA")
     assert rows_of(served, drop=("data_set_id", "problem_id")) == rows_of(
         direct, drop=("data_set_id", "problem_id")
     )
-    # emptied problem: partition dropped, serve returns empty
-    assert part_files("p_002") is None
+    # emptied problem: no files in the head manifest, serve returns empty
+    assert _head_files(mv, "p_002") == []
     assert mv.serve("DSA", "p_002").count() == 0
 
 

@@ -937,3 +937,91 @@ def test_merge_into_empty_table_and_idempotency(spark, table):
     v = table.latest_version()
     replay = table.merge_into(src, on="run_id", idempotency_key="m1")
     assert replay["version"] == v and table.latest_version() == v
+
+
+def test_partition_values_decodes_spark_escapes():
+    from observation_lakehouse_spark.transaction import partition_values
+
+    assert partition_values("data_set_id=dsA/problem_id=p1/x-part-0.parquet") == {
+        "data_set_id": "dsA",
+        "problem_id": "p1",
+    }
+    # %XX escapes undone (incl. the control range), a stray '%' kept, the
+    # Hive null sentinel read as None, absolute URIs and their parents ok
+    got = partition_values(
+        "file:/tmp/a=1/t/data/data_set_id=__HIVE_DEFAULT_PARTITION__"
+        "/problem_id=p%3Aw%01%2Fid%zz/f.parquet"
+    )
+    assert got == {"a": "1", "data_set_id": None, "problem_id": "p:w\x01/id%zz"}
+    assert partition_values("f.parquet") == {}
+
+
+def test_commit_partitions_replaces_only_named_partitions(spark, table):
+    table.append(_batch(spark, "dsA", 0, 9))  # p0, p1, p2 x 3 rows
+    table.append(_batch(spark, "dsB", 0, 3))
+    from observation_lakehouse_spark.transaction import partition_values
+
+    replaced = [("dsA", "p1"), ("dsA", "p2")]
+    kept = [
+        f
+        for f in table._manifest(table.latest_version())["files"]
+        if tuple(partition_values(f).values()) not in replaced
+    ]
+    # replace dsA/p1 with new rows, empty dsA/p2 (no files staged for it)
+    staged = table.stage(_batch(spark, "dsA", 100, 9).filter("problem_id = 'p1'"))
+    v = table.commit_partitions(staged, replaced)
+    assert sorted(table._manifest(v)["files"]) == sorted(kept + staged)
+    got = {
+        (r["data_set_id"], r["problem_id"]): sorted(r["ids"])
+        for r in table.read()
+        .groupBy("data_set_id", "problem_id")
+        .agg(F.collect_list("run_id").alias("ids"))
+        .collect()
+    }
+    assert got == {
+        ("dsA", "p0"): [0, 3, 6],
+        ("dsA", "p1"): [100, 103, 106],
+        ("dsB", "p0"): [0],
+        ("dsB", "p1"): [1],
+        ("dsB", "p2"): [2],
+    }
+    # staged files outside the named partitions would duplicate kept rows
+    stray = table.stage(_batch(spark, "dsA", 200, 3))
+    with pytest.raises(ValueError, match="outside the replaced partitions"):
+        table.commit_partitions(stray, [("dsA", "p0")])
+
+
+def test_commit_partitions_rebases_onto_concurrent_commit(spark, table):
+    """A partition replace staged against v1 must keep a commit that landed
+    after it was staged: the drop is re-derived from the head it commits
+    onto (the optimistic loop), never from the snapshot it started from."""
+    table.append(_batch(spark, "dsA", 0, 3))
+    staged = table.stage(_batch(spark, "dsA", 10, 3).filter("problem_id = 'p1'"))
+    table.append(_batch(spark, "dsB", 0, 3))  # lands between stage and commit
+    table.commit_partitions(staged, [("dsA", "p1")])
+    got = sorted(
+        (r["data_set_id"], r["run_id"]) for r in table.read().collect()
+    )
+    assert got == [("dsA", 0), ("dsA", 2), ("dsA", 10), ("dsB", 0), ("dsB", 1), ("dsB", 2)]
+
+
+def test_read_partitions_scopes_from_manifest(spark, table):
+    table.append(_batch(spark, "dsA", 0, 9))
+    table.append(_batch(spark, "dsB", 0, 3))
+    one = table.read(partitions=[("dsA", "p1")])
+    assert sorted(r["run_id"] for r in one.collect()) == [1, 4, 7]
+    # the scan's file index holds only that partition's files
+    assert one.inputFiles() and all(
+        "data_set_id=dsA/problem_id=p1/" in f for f in one.inputFiles()
+    )
+    two = table.read(partitions=[("dsA", "p0"), ("dsB", "p2")])
+    assert sorted(r["run_id"] for r in two.collect()) == [0, 2, 3, 6]
+    none = table.read(partitions=[("dsC", "p0")])
+    assert none.count() == 0 and none.schema == table.schema
+    # deletion vectors still apply to a scoped read
+    table.delete_where("data_set_id = 'dsA' AND run_id = 4")
+    assert sorted(
+        r["run_id"] for r in table.read(partitions=[("dsA", "p1")]).collect()
+    ) == [1, 7]
+    with pytest.raises(ValueError, match="one value per partition column"):
+        table.read(partitions=[("dsA",)])
