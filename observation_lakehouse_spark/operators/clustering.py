@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from observation_lakehouse_spark.functions.ordered_agg import ordered_values
+from observation_lakehouse_spark.plans.serving import problem_plan
 
 
 def behavior_signatures(observations: DataFrame) -> DataFrame:
@@ -75,31 +76,46 @@ def behavioral_clustering(
     cluster, sort — collapses into ONE single-task stage instead of four
     exchanges (the interactive per-problem plan). Full-corpus runs
     (``problem_id=None``) keep the parallel shuffle plan.
+
+    A problem-scoped call on a whole-snapshot read returns the memoized plan
+    for that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
+    problem_plan`).
     """
     if single_partition is None:
         single_partition = problem_id is not None
-    if data_set_id is not None:
-        observations = observations.filter(F.col("data_set_id") == data_set_id)
-    if problem_id is not None:
-        observations = observations.filter(F.col("problem_id") == problem_id)
-    if single_partition:
-        observations = observations.coalesce(1)
 
-    fp = behavior_fingerprints(observations)
-    # Shuffle a 64-char digest, not the full fingerprint array (scale rule §7.3.3).
-    fp = fp.withColumn("fingerprint_key", F.sha2(F.to_json("behavior_fingerprint"), 256))
-    return (
-        fp.groupBy("run_id", "problem_id", "fingerprint_key")
-        .agg(
-            F.array_sort(F.collect_list("implementation_id")).alias(
-                "equivalent_commits_cluster"
-            ),
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.max("test_size").alias("test_size"),
-            F.first("behavior_fingerprint").alias("behavior_fingerprint"),
+    def build() -> DataFrame:
+        obs = observations
+        if data_set_id is not None:
+            obs = obs.filter(F.col("data_set_id") == data_set_id)
+        if problem_id is not None:
+            obs = obs.filter(F.col("problem_id") == problem_id)
+        if single_partition:
+            obs = obs.coalesce(1)
+
+        fp = behavior_fingerprints(obs)
+        # Shuffle a 64-char digest, not the full fingerprint array (scale rule §7.3.3).
+        fp = fp.withColumn("fingerprint_key", F.sha2(F.to_json("behavior_fingerprint"), 256))
+        return (
+            fp.groupBy("run_id", "problem_id", "fingerprint_key")
+            .agg(
+                F.array_sort(F.collect_list("implementation_id")).alias(
+                    "equivalent_commits_cluster"
+                ),
+                F.count(F.lit(1)).alias("cluster_size"),
+                F.max("test_size").alias("test_size"),
+                F.first("behavior_fingerprint").alias("behavior_fingerprint"),
+            )
+            .drop("fingerprint_key")
+            .orderBy(F.desc("cluster_size"), F.asc("equivalent_commits_cluster"))
         )
-        .drop("fingerprint_key")
-        .orderBy(F.desc("cluster_size"), F.asc("equivalent_commits_cluster"))
+
+    return problem_plan(
+        "behavioral_clustering",
+        (problem_id, data_set_id),
+        [observations],
+        build,
+        reusable=problem_id is not None and single_partition,
     )
 
 
@@ -111,6 +127,13 @@ def consensus_oracle(
     """The largest behavioral cluster = majority-vote oracle (reference README.md:15).
 
     Ties broken deterministically by member list (the reference takes whichever
-    row DuckDB emits first; we pin the order).
+    row DuckDB emits first; we pin the order). Memoized like
+    :func:`behavioral_clustering`.
     """
-    return behavioral_clustering(observations, problem_id, data_set_id).limit(1)
+    return problem_plan(
+        "consensus_oracle",
+        (problem_id, data_set_id),
+        [observations],
+        lambda: behavioral_clustering(observations, problem_id, data_set_id).limit(1),
+        reusable=problem_id is not None,
+    )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from observation_lakehouse_spark.plans.serving import problem_plan
+
 
 def _scoped(observations: DataFrame, data_set_id: str | None, problem_id: str | None) -> DataFrame:
     # Partition-key literals → static partition pruning (P4).
@@ -55,20 +57,36 @@ def srm_output_view(
     ONE single-task stage — the interactive per-problem plan. A problem with
     CI-scale fan-in (≫10⁵ rows) should pass ``False`` to keep the parallel
     shuffle plan.
+
+    A problem-scoped call on a whole-snapshot read returns the memoized plan
+    for that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
+    problem_plan`).
     """
     if single_partition is None:
         single_partition = problem_id is not None
-    scoped = _scoped(observations, data_set_id, problem_id).select(
-        "test_id", "step_id", "implementation_id", "output"
-    )
-    if single_partition:
-        scoped = scoped.coalesce(1)
-    pivoted = scoped.groupBy("test_id", "step_id")
     if implementation_ids is not None:
-        pivoted = pivoted.pivot("implementation_id", implementation_ids)
-    else:
-        pivoted = pivoted.pivot("implementation_id")
-    return pivoted.agg(F.first("output")).orderBy("test_id", "step_id")
+        implementation_ids = tuple(implementation_ids)
+
+    def build() -> DataFrame:
+        scoped = _scoped(observations, data_set_id, problem_id).select(
+            "test_id", "step_id", "implementation_id", "output"
+        )
+        if single_partition:
+            scoped = scoped.coalesce(1)
+        pivoted = scoped.groupBy("test_id", "step_id")
+        if implementation_ids is not None:
+            pivoted = pivoted.pivot("implementation_id", list(implementation_ids))
+        else:
+            pivoted = pivoted.pivot("implementation_id")
+        return pivoted.agg(F.first("output")).orderBy("test_id", "step_id")
+
+    return problem_plan(
+        "srm_output_view",
+        (problem_id, data_set_id, implementation_ids),
+        [observations],
+        build,
+        reusable=problem_id is not None and single_partition,
+    )
 
 
 def srm_shape_stats(srm: DataFrame) -> dict[str, int]:

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from observation_lakehouse_spark.transaction import (
     AtomicParquetTable,
     partition_values,
+    snapshot_files,
+    snapshot_of,
 )
 
 PARTITION_COLS = ("data_set_id", "problem_id")
@@ -217,12 +219,16 @@ def _files_in_partitions(
 ) -> list[str]:
     """``df``'s input files that lie in the given (data_set_id, problem_id)
     partitions, matched on their decoded ``k=v`` directories — no job. A
-    filtered frame's ``inputFiles()`` is the UNPRUNED listing, so the
-    selection is by path here."""
+    whole-snapshot read's files come from its manifest; any other frame's
+    from ``inputFiles()`` (one py4j call per file). A filtered frame's
+    ``inputFiles()`` is the UNPRUNED listing, so the selection is by path
+    here."""
     wanted = set(probs)
+    snap = snapshot_of(df)
+    files = snapshot_files(snap) if snap is not None else df.inputFiles()
     return [
         f
-        for f in df.inputFiles()
+        for f in files
         if tuple(partition_values(f).get(c) for c in PARTITION_COLS) in wanted
     ]
 

@@ -3,35 +3,42 @@
 The reference's per-problem loop re-binds a DuckDB prepared statement, paying
 parse/plan once. Spark has no bind parameters in the DataFrame API, and a
 freshly-built per-problem DataFrame pays full Catalyst analysis + optimization
-+ physical planning on every call — measured ~40–90 ms of a ~200 ms
-interactive p50 (scripts/bench_domain.py floor diagnostics). A DataFrame
-OBJECT, however, caches its QueryExecution after the first action, so
-re-executing the SAME object skips planning entirely.
++ physical planning on every call. A DataFrame OBJECT, however, caches its
+QueryExecution after the first action, so re-executing the SAME object skips
+planning entirely.
 
-:class:`QueryCache` memoizes the built DataFrame per (family, parameters):
-the first call per problem plans as usual; every repeat executes the frozen
-physical plan — measured ~2× lower p50 on the SRM family. This is the right
-shape for the reference's real workload (researchers re-query the problems
-they are looking at); first-hit latency is bounded below by Spark's planner +
-scheduler floor, and corpus-wide serving belongs to the batch job (one
-partitioned pass over every problem, see bench_domain's batch metrics).
+:class:`QueryCache` memoizes built DataFrames per (family, parameters). The
+library keeps ONE instance, the plan memo of the four per-problem families
+(``srm_output_view``, ``behavioral_clustering``, ``consensus_oracle``,
+``three_way_join``), used through :func:`problem_plan`.
 
-Correctness note: a frozen plan pins the FILES it scans (the file index is
-resolved at planning). After appending to a served table, call
-:meth:`QueryCache.invalidate` (ObservationLakehouse.append already refreshes
-its own table reads the same way).
+Snapshot-keyed contract: a frozen plan pins the files it scans, so a plan may
+only be reused while its inputs are the same immutable snapshot. The memo key
+is therefore ``(family, parameters, SnapshotId of every input)``, where a
+:class:`~observation_lakehouse_spark.transaction.SnapshotId` (table location,
+version, schema, SparkSession) is recorded by every whole-snapshot
+``AtomicParquetTable.read``. A commit, ``add_column``, ``rollback`` or
+``delete_where`` makes the next read a new snapshot, and with it a new key —
+nothing needs invalidating. An input that is not a snapshot read (a catalog
+table, a user frame, a filtered frame) has no identity, so the call bypasses
+the memo and builds as usual. Only problem-scoped, exchange-free plans are
+memoized, so a hit re-executes a frozen one-stage plan: every request still
+runs a Spark job that scans the snapshot's files and recomputes its answer.
 """
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
-from collections.abc import Callable, Hashable
+from collections.abc import Callable, Hashable, Sequence
 
 from pyspark.sql import DataFrame
 
+from observation_lakehouse_spark.transaction import snapshot_of
+
 
 class QueryCache:
-    """LRU memo of built DataFrames keyed by (family, params).
+    """Thread-safe LRU memo of built DataFrames keyed by (family, params).
 
     ``maxsize`` bounds driver memory: each entry holds an analyzed plan
     (kilobytes), not data — 1024 plans is a few MB.
@@ -42,6 +49,7 @@ class QueryCache:
             raise ValueError(f"maxsize must be >= 1, got {maxsize}")
         self.maxsize = maxsize
         self._plans: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._lock = threading.Lock()
         self.hits = 0
         self.misses = 0
 
@@ -51,25 +59,67 @@ class QueryCache:
         params: Hashable,
         builder: Callable[[], DataFrame],
     ) -> DataFrame:
-        """Return the memoized DataFrame for (family, params), building on miss."""
+        """Return the memoized DataFrame for (family, params), building on
+        miss. The build runs outside the lock; racing misses of one key all
+        return the first plan stored."""
         key = (family, params)
-        df = self._plans.get(key)
-        if df is not None:
-            self.hits += 1
-            self._plans.move_to_end(key)
-            return df
-        self.misses += 1
+        with self._lock:
+            df = self._plans.get(key)
+            if df is not None:
+                self.hits += 1
+                self._plans.move_to_end(key)
+                return df
+            self.misses += 1
         df = builder()
-        self._plans[key] = df
-        if len(self._plans) > self.maxsize:
-            self._plans.popitem(last=False)
+        with self._lock:
+            df = self._plans.setdefault(key, df)
+            self._plans.move_to_end(key)
+            while len(self._plans) > self.maxsize:
+                self._plans.popitem(last=False)
         return df
 
     def invalidate(self, family: str | None = None) -> None:
-        """Drop memoized plans (all, or one family's) after underlying data
-        changes — a frozen plan pins the file list it scans."""
-        if family is None:
-            self._plans.clear()
-            return
-        for key in [k for k in self._plans if k[0] == family]:
-            del self._plans[key]
+        """Drop memoized plans (all, or one family's)."""
+        with self._lock:
+            if family is None:
+                self._plans.clear()
+                return
+            for key in [k for k in self._plans if k[0] == family]:
+                del self._plans[key]
+
+    def __len__(self) -> int:
+        return len(self._plans)
+
+
+_PLANS = QueryCache()
+
+
+def plan_memo_stats() -> dict[str, int]:
+    """Hits, misses and stored plans of the library's plan memo, for
+    measuring how much per-problem traffic reuses a plan."""
+    return {"hits": _PLANS.hits, "misses": _PLANS.misses, "plans": len(_PLANS)}
+
+
+def problem_plan(
+    family: str,
+    params: Hashable,
+    inputs: Sequence[DataFrame],
+    build: Callable[[], DataFrame],
+    reusable: bool,
+) -> DataFrame:
+    """``build()``, memoized per (family, params, input snapshots) when the
+    caller declares the plan ``reusable`` and every input is a
+    whole-snapshot read; otherwise a plain ``build()``.
+
+    ``reusable`` means problem-scoped and exchange-free (the families'
+    single-partition plans): re-running such a plan re-scans its inputs.
+    A plan with an exchange is never memoized, because a re-run reuses the
+    shuffle output or broadcast relation of the earlier run instead of
+    recomputing it.
+    """
+    if not reusable:
+        return build()
+    snaps = tuple(snapshot_of(df) for df in inputs)
+    if any(s is None for s in snaps):
+        return build()
+    return _PLANS.get(family, (params, snaps), build)

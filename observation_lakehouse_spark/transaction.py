@@ -33,10 +33,15 @@ Protocol (writer):
 Readers load the highest committed manifest and scan exactly its file list
 (``basePath`` keeps partition-column parsing and pruning), so they see every
 commit entirely or not at all — snapshot isolation — and ``read(version=N)``
-is time travel for free. An ``idempotency_key`` per commit makes retried
-appends no-ops: the key is recorded inside the same atomic manifest publish as
-the data, which is what upgrades a replayed streaming micro-batch from
-at-least-once to exactly-once (streaming/ingest.py passes the batch id).
+is time travel for free. A published manifest never changes, so a
+whole-snapshot read is memoized per ``(version, schema)``: repeat reads of one
+snapshot return the same DataFrame without re-listing its files, and every
+frame a whole-snapshot read returns is recorded with its :class:`SnapshotId`
+(see :func:`snapshot_of`), the key plan memos reuse work under. An
+``idempotency_key`` per commit makes retried appends no-ops: the key is
+recorded inside the same atomic manifest publish as the data, which is what
+upgrades a replayed streaming micro-batch from at-least-once to exactly-once
+(streaming/ingest.py passes the batch id).
 """
 
 from __future__ import annotations
@@ -45,7 +50,9 @@ import json
 import os
 import shutil
 import uuid
+import weakref
 from pathlib import Path
+from typing import NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +80,45 @@ def partition_values(path: str) -> dict[str, str | None]:
     return out
 
 
+class SnapshotId(NamedTuple):
+    """What a whole-snapshot :meth:`AtomicParquetTable.read` scanned. Two
+    reads with equal ids scan the same rows, so work built on one may be
+    reused for the other. ``stamp`` is the manifest file's (inode, mtime):
+    a table deleted and re-created at the same location is a new snapshot
+    even at the same version number."""
+
+    location: str
+    version: int
+    stamp: tuple[int, int] | None
+    schema: str
+    spark: SparkSession
+
+
+# frame returned by a whole-snapshot read -> its SnapshotId; weak keys, so an
+# entry lives exactly as long as its frame
+_SNAPSHOT_READS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def snapshot_of(df: DataFrame) -> SnapshotId | None:
+    """The snapshot ``df`` is a whole-snapshot read of, or ``None`` for any
+    other frame — a filtered or derived frame, a catalog table, a user
+    frame, a partition-scoped read."""
+    return _SNAPSHOT_READS.get(df)
+
+
+def _read_manifest(location: Path, version: int) -> dict:
+    if version == 0:
+        return {"version": 0, "files": [], "commits": {}}
+    return json.loads((location / "_manifests" / f"v{version}.json").read_text())
+
+
+def snapshot_files(snap: SnapshotId) -> list[str]:
+    """Absolute paths of the data files snapshot ``snap`` lists, from its
+    manifest — no Spark call."""
+    location = Path(snap.location)
+    return [str(location / "data" / f) for f in _read_manifest(location, snap.version)["files"]]
+
+
 class CommitConflict(RuntimeError):
     """Raised when the optimistic commit loop exhausts its retries."""
 
@@ -90,6 +136,9 @@ class CheckViolation(RuntimeError):
 class AtomicParquetTable:
     """A parquet directory with manifest-committed snapshots (see module doc)."""
 
+    # whole-snapshot reads memoized per table handle (module doc)
+    _READ_MEMO_SIZE = 8
+
     def __init__(
         self,
         spark: SparkSession,
@@ -103,6 +152,9 @@ class AtomicParquetTable:
         self.manifest_dir = self.location / "_manifests"
         self.data_dir = self.location / "data"
         self.max_commit_retries = max_commit_retries
+        from observation_lakehouse_spark.plans.serving import QueryCache
+
+        self._reads = QueryCache(self._READ_MEMO_SIZE)
         schema_file = self.location / "_schema.json"
         if schema_file.exists():
             _, meta = self._read_schema_meta()
@@ -274,9 +326,15 @@ class AtomicParquetTable:
         return vs[-1] if vs else 0
 
     def _manifest(self, version: int) -> dict:
+        return _read_manifest(self.location, version)
+
+    def _stamp(self, version: int) -> tuple[int, int] | None:
+        """(inode, mtime) of snapshot ``version``'s manifest; raises
+        FileNotFoundError for a version never committed or expired."""
         if version == 0:
-            return {"version": 0, "files": [], "commits": {}}
-        return json.loads((self.manifest_dir / f"v{version}.json").read_text())
+            return None
+        st = os.stat(self.manifest_dir / f"v{version}.json")
+        return st.st_ino, st.st_mtime_ns
 
     # -- writes ---------------------------------------------------------------
 
@@ -1225,6 +1283,14 @@ class AtomicParquetTable:
         partition directories parsed as columns, so partition pruning still
         applies; the explicit schema keeps their declared types.
 
+        A whole-snapshot read (no ``partitions``) returns the SAME DataFrame
+        for the same ``(version, schema)`` on this handle, so a repeat read
+        does not re-list the snapshot's files. The head version is looked up
+        on every call, so a commit from any process, ``add_column``,
+        ``rollback`` or ``delete_where`` is seen by the next read, and a
+        time-travel read of an expired version still raises. The frame is
+        recorded with its :class:`SnapshotId` (:func:`snapshot_of`).
+
         ``partitions`` (value tuples in ``partition_by`` order) scopes the
         read from the manifest: Spark is handed only those partitions' files,
         so the plan's file index never holds the rest of the table. No
@@ -1235,12 +1301,20 @@ class AtomicParquetTable:
                 raise ValueError("pass version OR ref, not both")
             version = self.resolve_ref(ref)
         v = self.latest_version() if version is None else version
-        m = self._manifest(v)
-        files = m["files"]
         if partitions is not None:
+            m = self._manifest(v)
             wanted = {self._partition_key(p) for p in partitions}
-            files = [f for f in files if self._file_partition(f) in wanted]
-        return self._scan_files(files, m)
+            files = [f for f in m["files"] if self._file_partition(f) in wanted]
+            return self._scan_files(files, m)
+        snap = SnapshotId(str(self.location), v, self._stamp(v), self.schema.json(), self.spark)
+
+        def build() -> DataFrame:
+            m = self._manifest(v)
+            df = self._scan_files(m["files"], m)
+            _SNAPSHOT_READS[df] = snap
+            return df
+
+        return self._reads.get("read", (v, snap.stamp, snap.schema), build)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
         """Scan exactly ``files`` (``manifest``'s deletion vectors applied),

@@ -201,10 +201,9 @@ def test_crashed_refresh_leaves_previous_rows_serving(
     )
 
 
-def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
-    """A tiny append into a LARGE partition recomputes that whole partition,
-    so its refresh width is sized from the partition's files, not the
-    delta's; a tiny append into a tiny partition stays at width 1."""
+def _hex_source(spark, tmp_path):
+    """An atomic source table and a row maker whose hex digests barely
+    compress (~64 bytes per row on disk)."""
     from pyspark.sql.types import _parse_datatype_string
 
     from observation_lakehouse_spark.transaction import AtomicParquetTable
@@ -219,13 +218,20 @@ def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
     )
 
     def rows(pid, lo, n):
-        # hex digests barely compress: ~64 bytes per row on disk
         return spark.range(lo, lo + n).select(
             F.lit("DSA").alias("data_set_id"),
             F.lit(pid).alias("problem_id"),
             F.sha2(F.col("id").cast("string"), 256).alias("output"),
         )
 
+    return src, rows
+
+
+def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
+    """A tiny append into a LARGE partition recomputes that whole partition,
+    so its refresh width is sized from the partition's files, not the
+    delta's; a tiny append into a tiny partition stays at width 1."""
+    src, rows = _hex_source(spark, tmp_path)
     src.append(rows("p_big", 0, 40_000).unionByName(rows("p_small", 0, 10)))
     widths = []
 
@@ -247,6 +253,34 @@ def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
         "p_big": 40_001,
         "p_small": 11,
     }
+
+
+def test_refresh_width_from_manifest_equals_input_files(spark, tmp_path):
+    """A whole-snapshot source's touched-partition files come from its
+    manifest; a derived frame of the same snapshot lists them through
+    ``inputFiles()``. Both select the same files, so the refresh width is
+    unchanged."""
+    import re
+
+    from observation_lakehouse_spark.plans.incremental import _refresh_width
+    from observation_lakehouse_spark.plans.result_mv import _files_in_partitions
+    from observation_lakehouse_spark.transaction import snapshot_of
+
+    src, rows = _hex_source(spark, tmp_path)
+    src.append(rows("p_big", 0, 40_000).unionByName(rows("p_small", 0, 10)))
+    src.append(rows("p_big", 10**6, 5).unionByName(rows("p_other", 0, 5)))
+    snap = src.read()
+    derived = snap.select("*")
+    assert snapshot_of(snap) is not None and snapshot_of(derived) is None
+    delta = src.read_changes(1)
+    for touched in ([("DSA", "p_big")], [("DSA", "p_small"), ("DSA", "p_other")]):
+        manifest = _files_in_partitions(snap, touched)
+        listed = _files_in_partitions(derived, touched)
+        norm = lambda fs: sorted(re.sub("^file:/+", "/", f) for f in fs)  # noqa: E731
+        assert manifest and norm(manifest) == norm(listed), touched
+        assert _refresh_width(spark, delta, files=manifest) == _refresh_width(
+            spark, delta, files=listed
+        ), touched
 
 
 def test_refresh_problems_empty_is_noop(spark, observations, mv_setup):

@@ -1025,3 +1025,100 @@ def test_read_partitions_scopes_from_manifest(spark, table):
     ) == [1, 7]
     with pytest.raises(ValueError, match="one value per partition column"):
         table.read(partitions=[("dsA",)])
+
+
+# -- snapshot read memo ---------------------------------------------------------
+
+
+def test_read_memo_reuses_frame_per_snapshot(spark, table):
+    from observation_lakehouse_spark.transaction import snapshot_of
+
+    table.append(_batch(spark, "dsA", 0, 6))
+    first = table.read()
+    assert table.read() is first
+    snap = snapshot_of(first)
+    assert (snap.version, snap.spark) == (1, spark)
+    # derived frames and partition-scoped reads carry no snapshot identity
+    assert snapshot_of(first.filter("run_id > 2")) is None
+    assert snapshot_of(table.read(partitions=[("dsA", "p0")])) is None
+    v2 = table.append(_batch(spark, "dsA", 10, 3))
+    head = table.read()
+    assert head is not first and head.count() == 9
+    assert snapshot_of(head).version == v2
+    # time travel is memoized too, and still reads its own snapshot
+    assert table.read(version=1) is first and first.count() == 6
+
+
+def test_read_memo_sees_commit_through_another_handle(spark, table):
+    table.append(_batch(spark, "dsA", 0, 4))
+    before = table.read()
+    other = AtomicParquetTable(spark, str(table.location))
+    other.append(_batch(spark, "dsB", 100, 3))
+    after = table.read()
+    assert after is not before and after.count() == 7
+
+
+def test_read_memo_sees_add_column_without_new_version(spark, table):
+    table.append(_batch(spark, "dsA", 0, 4))
+    before = table.read()
+    table.add_column("notes", "string")
+    after = table.read()
+    assert table.latest_version() == 1
+    assert after is not before and "notes" in after.columns
+    assert "notes" not in before.columns
+
+
+def test_read_memo_sees_rollback_and_delete_where(spark, table):
+    table.append(_batch(spark, "dsA", 0, 6))
+    table.append(_batch(spark, "dsB", 100, 2))
+    assert table.read().count() == 8
+    table.rollback(1)
+    assert table.read().count() == 6
+    table.delete_where("run_id < 2")
+    assert sorted(r["run_id"] for r in table.read().collect()) == [2, 3, 4, 5]
+
+
+def test_read_memo_expired_version_still_raises(spark, tmp_path):
+    t = _mk(spark, tmp_path, "exp_memo")
+    t.append(_batch(spark, "dsA", 0, 3))
+    v2 = t.append(_batch(spark, "dsB", 100, 2))
+    t.append(_batch(spark, "dsB", 200, 1))
+    assert t.read(version=v2).count() == 5  # memoized now
+    t.expire_snapshots(keep_last=1)
+    t.vacuum()
+    with pytest.raises(FileNotFoundError):
+        t.read(version=v2)
+    assert t.read().count() == 6
+
+
+def test_read_memo_recreated_table_is_a_new_snapshot(spark, tmp_path):
+    import shutil
+
+    t = _mk(spark, tmp_path, "recreated")
+    t.append(_batch(spark, "dsA", 0, 3))
+    old = t.read()
+    shutil.rmtree(t.location)
+    t2 = _mk(spark, tmp_path, "recreated")
+    t2.append(_batch(spark, "dsA", 0, 5))
+    from observation_lakehouse_spark.transaction import snapshot_of
+
+    assert snapshot_of(t2.read()) != snapshot_of(old)
+    assert t2.read().count() == 5
+
+
+def test_lakehouse_table_keeps_read_your_writes(spark, tmp_path):
+    from observation_lakehouse_spark.lakehouse import ObservationLakehouse
+    from observation_lakehouse_spark.schemas import OBSERVATIONS_SCHEMA
+    from tests.conftest import observation_rows
+
+    lh = ObservationLakehouse(
+        spark, database="olake_memo", table_format="atomic", location=str(tmp_path)
+    )
+    df = spark.createDataFrame(observation_rows()[:40], OBSERVATIONS_SCHEMA)
+    lh.append_observations(df)
+    first = lh.table("observations")
+    assert lh.table("observations") is first and first.count() == 40
+    lh.append_observations(df.limit(5))
+    assert lh.table("observations").count() == 45
+    lh.evolve_observations_schema("note", "string")
+    assert "note" in lh.table("observations").columns
