@@ -3,13 +3,17 @@
 Semantics match the reference's three-level DuckDB CTE chain
 (/root/reference/benchmark_behavioral_clustering.py:49-96):
 
-1. signature  — per (run_id, problem_id, test_id, implementation_id):
-   ``to_json(list(output ORDER BY step_id))``
-2. fingerprint — per (run_id, problem_id, implementation_id):
+1. signature  — per (data_set_id, run_id, problem_id, test_id,
+   implementation_id): ``to_json(list(output ORDER BY step_id))``
+2. fingerprint — per (data_set_id, run_id, problem_id, implementation_id):
    ``array_agg(signature ORDER BY test_id)`` + test count
 3. clusters   — GROUP BY fingerprint → members, cluster_size, test_size,
    ordered by cluster_size DESC. The first row is the consensus oracle
    (majority-vote behavior, reference README.md:15).
+
+Every level keeps ``data_set_id`` beside ``problem_id``: a problem id is only
+unique within its data set, so a corpus-wide run must not merge the traces of
+two data sets' same-named problems.
 
 Spark-first translation notes:
 
@@ -32,23 +36,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from observation_lakehouse_spark.functions.ordered_agg import ordered_values
-from observation_lakehouse_spark.plans.serving import problem_plan
+from observation_lakehouse_spark.plans.serving import problem_plan, problem_scope
 
 
 def behavior_signatures(observations: DataFrame) -> DataFrame:
     """Level 1: JSON signature of the ordered output trace per (run, test, impl)."""
     return observations.groupBy(
-        "run_id", "problem_id", "test_id", "implementation_id"
+        "data_set_id", "run_id", "problem_id", "test_id", "implementation_id"
     ).agg(
         F.to_json(ordered_values("step_id", "output")).alias("output_sequence_signature")
     )
 
 
 def behavior_fingerprints(observations: DataFrame) -> DataFrame:
-    """Level 2: ordered array of signatures per (run, problem, impl)."""
+    """Level 2: ordered array of signatures per (data set, run, problem, impl)."""
     return (
         behavior_signatures(observations)
-        .groupBy("run_id", "problem_id", "implementation_id")
+        .groupBy("data_set_id", "run_id", "problem_id", "implementation_id")
         .agg(
             ordered_values("test_id", "output_sequence_signature").alias(
                 "behavior_fingerprint"
@@ -62,42 +66,28 @@ def behavioral_clustering(
     observations: DataFrame,
     problem_id: str | None = None,
     data_set_id: str | None = None,
-    single_partition: bool | None = None,
 ) -> DataFrame:
     """Level 3: clusters of behaviorally-equivalent implementations.
 
-    Returns (equivalent_commits_cluster: array<string> sorted, cluster_size,
-    test_size, behavior_fingerprint exemplar), largest cluster first.
+    Returns (data_set_id, run_id, problem_id, equivalent_commits_cluster:
+    array<string> sorted, cluster_size, test_size, behavior_fingerprint
+    exemplar), largest cluster first.
 
-    ``single_partition`` (default: auto — on iff ``problem_id`` is scoped)
-    coalesces the pruned scan to one partition. All three aggregation levels
-    group by supersets of a common prefix, so a single partition satisfies
-    every required distribution and the whole chain — signature, fingerprint,
-    cluster, sort — collapses into ONE single-task stage instead of four
-    exchanges (the interactive per-problem plan). Full-corpus runs
-    (``problem_id=None``) keep the parallel shuffle plan.
-
-    A problem-scoped call on a whole-snapshot read returns the memoized plan
-    for that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
-    problem_plan`).
+    Problem-scoped, the read is one partition (:func:`~observation_lakehouse_spark.
+    plans.serving.problem_scope`), which satisfies every required
+    distribution, so the whole chain — signature, fingerprint, cluster, sort —
+    is ONE single-task stage instead of four exchanges, and a call on a
+    whole-snapshot read returns the memoized plan for that snapshot
+    (:func:`~observation_lakehouse_spark.plans.serving.problem_plan`).
+    Corpus-wide runs (``problem_id=None``) keep the parallel shuffle plan.
     """
-    if single_partition is None:
-        single_partition = problem_id is not None
 
     def build() -> DataFrame:
-        obs = observations
-        if data_set_id is not None:
-            obs = obs.filter(F.col("data_set_id") == data_set_id)
-        if problem_id is not None:
-            obs = obs.filter(F.col("problem_id") == problem_id)
-        if single_partition:
-            obs = obs.coalesce(1)
-
-        fp = behavior_fingerprints(obs)
+        fp = behavior_fingerprints(problem_scope(observations, data_set_id, problem_id))
         # Shuffle a 64-char digest, not the full fingerprint array (scale rule §7.3.3).
         fp = fp.withColumn("fingerprint_key", F.sha2(F.to_json("behavior_fingerprint"), 256))
         return (
-            fp.groupBy("run_id", "problem_id", "fingerprint_key")
+            fp.groupBy("data_set_id", "run_id", "problem_id", "fingerprint_key")
             .agg(
                 F.array_sort(F.collect_list("implementation_id")).alias(
                     "equivalent_commits_cluster"
@@ -111,11 +101,7 @@ def behavioral_clustering(
         )
 
     return problem_plan(
-        "behavioral_clustering",
-        (problem_id, data_set_id),
-        [observations],
-        build,
-        reusable=problem_id is not None and single_partition,
+        "behavioral_clustering", data_set_id, problem_id, (), [observations], build
     )
 
 
@@ -132,8 +118,9 @@ def consensus_oracle(
     """
     return problem_plan(
         "consensus_oracle",
-        (problem_id, data_set_id),
+        data_set_id,
+        problem_id,
+        (),
         [observations],
         lambda: behavioral_clustering(observations, problem_id, data_set_id).limit(1),
-        reusable=problem_id is not None,
     )

@@ -11,11 +11,11 @@ projecting all observation columns plus ``program_code`` (impl source),
 
 Physical strategy for 100 TB: observations is the fact table (one row per
 execution step); code_implementations and tests are dimensions, smaller by the
-step-count × test-count factor. Corpus-wide, both dimension sides are
-broadcast — no shuffle of the fact table at all. When a dimension is too big
-to broadcast (CI-scale), drop the hint and AQE picks SMJ with dynamic
-partition pruning from the dimension filters. A problem-scoped call reads one
-partition per leg and joins the three in one single-task stage.
+step-count × test-count factor. Both dimension legs are broadcast at every
+scope — no shuffle of the fact table at all. Corpus-wide, the broadcast join
+runs over the parallel fact scan; a problem-scoped call reads one partition
+per leg (:func:`~observation_lakehouse_spark.plans.serving.problem_scope`) and
+probes one problem's broadcast code and tests in one single-task stage.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from observation_lakehouse_spark.plans.serving import problem_plan
+from observation_lakehouse_spark.plans.serving import problem_plan, problem_scope
 
 
 def three_way_join(
@@ -32,8 +32,6 @@ def three_way_join(
     tests: DataFrame,
     data_set_id: str | None = None,
     problem_id: str | None = None,
-    broadcast_dims: bool = True,
-    single_partition: bool | None = None,
 ) -> DataFrame:
     """observations ⋈ code ⋈ tests with per-leg partition filters (J2).
 
@@ -41,62 +39,42 @@ def three_way_join(
     so each engine prunes each scan independently — we do the same rather than
     relying on Catalyst's filter inference, so pruning is static on every leg.
 
-    ``single_partition`` (default: auto — on iff ``problem_id`` is scoped,
-    the rule the other per-problem families use) picks the plan. On, all
-    three pruned legs coalesce to one partition, which satisfies the join
-    distributions outright: no broadcast-build jobs and no exchanges, the
-    whole join is one single-task stage. That plan is exchange-free, so a
-    problem-scoped call on whole-snapshot reads is memoized per snapshot
-    (:func:`~observation_lakehouse_spark.plans.serving.problem_plan`) and a
-    repeat re-runs it without planning. Off, the dimensions are broadcast
-    (``broadcast_dims``): the corpus-wide default, where no fact-table
-    shuffle is the point. Measured on the interactive per-problem loop
-    (perfbench ``interactive_queries --trace 1``, 4-core host, seeds 1/2),
-    the memoized single-partition join runs in 213/290 ms against
-    404-436 ms for the broadcast plan built per request.
+    One plan at every scope: the scoped legs, with the two dimension legs
+    broadcast. Problem-scoped, that is the plan Catalyst would pick for the
+    small legs anyway: its first run builds two broadcast relations of one
+    problem's rows, then one single-task stage scans and probes the fact leg.
+    A problem-scoped call on whole-snapshot reads is memoized per snapshot
+    (:func:`~observation_lakehouse_spark.plans.serving.problem_plan`); a
+    repeat runs one job that rescans the fact leg and reuses the broadcast
+    relations of the same immutable snapshot.
     """
 
-    if single_partition is None:
-        single_partition = problem_id is not None
-
     def build() -> DataFrame:
-        def scoped(df: DataFrame) -> DataFrame:
-            if data_set_id is not None:
-                df = df.filter(F.col("data_set_id") == data_set_id)
-            if problem_id is not None:
-                df = df.filter(F.col("problem_id") == problem_id)
-            return df
-
-        obs = scoped(observations)
-        code = scoped(code_implementations).select(
+        obs = problem_scope(observations, data_set_id, problem_id)
+        code = problem_scope(code_implementations, data_set_id, problem_id).select(
             "data_set_id",
             "problem_id",
             "implementation_id",
             F.col("source_code").alias("program_code"),
             "language",
         )
-        tst = scoped(tests).select(
+        tst = problem_scope(tests, data_set_id, problem_id).select(
             "data_set_id",
             "problem_id",
             "test_id",
             F.col("source_code").alias("test_code"),
         )
-        if single_partition:
-            obs, code, tst = obs.coalesce(1), code.coalesce(1), tst.coalesce(1)
-        elif broadcast_dims:
-            code = F.broadcast(code)
-            tst = F.broadcast(tst)
-
         return obs.join(
-            code, on=["implementation_id", "data_set_id", "problem_id"], how="inner"
-        ).join(tst, on=["test_id", "data_set_id", "problem_id"], how="inner")
+            F.broadcast(code), on=["implementation_id", "data_set_id", "problem_id"], how="inner"
+        ).join(F.broadcast(tst), on=["test_id", "data_set_id", "problem_id"], how="inner")
 
     return problem_plan(
         "three_way_join",
-        (problem_id, data_set_id),
+        data_set_id,
+        problem_id,
+        (),
         [observations, code_implementations, tests],
         build,
-        reusable=problem_id is not None and single_partition,
     )
 
 

@@ -4,7 +4,7 @@ Semantics match the reference's DuckDB query
 (/root/reference/benchmark_srm_output_view.py:50-77): rows = (test_id, step_id),
 one column per implementation_id, cell = FIRST(output).
 
-Two physical strategies, chosen by the caller:
+Two output shapes:
 
 1. ``srm_output_view`` — a real dynamic pivot, byte-for-byte the reference's shape.
    Correct for interactive per-problem views (26-37 impl columns at study scale,
@@ -16,9 +16,12 @@ Two physical strategies, chosen by the caller:
    limit, one hash aggregation; safe when a problem has 10⁵ implementations
    (CI-scale fan-in, SURVEY.md §7.5).
 
-Both filter on the (data_set_id, problem_id) partition keys FIRST so Catalyst's
-static partition pruning reads exactly one partition — the physical-design point
-the whole reference exists to make (reference README.md:112).
+Both scope their read with :func:`~observation_lakehouse_spark.plans.serving.
+problem_scope`: partition-key filters FIRST, so Catalyst's static partition
+pruning reads exactly one partition — the physical-design point the whole
+reference exists to make (reference README.md:112) — and, problem-scoped, one
+partition, so the aggregate and the sort run in one single-task stage with no
+exchange. Corpus-wide calls keep the parallel shuffle plan.
 """
 
 from __future__ import annotations
@@ -26,16 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from observation_lakehouse_spark.plans.serving import problem_plan
-
-
-def _scoped(observations: DataFrame, data_set_id: str | None, problem_id: str | None) -> DataFrame:
-    # Partition-key literals → static partition pruning (P4).
-    if data_set_id is not None:
-        observations = observations.filter(F.col("data_set_id") == data_set_id)
-    if problem_id is not None:
-        observations = observations.filter(F.col("problem_id") == problem_id)
-    return observations
+from observation_lakehouse_spark.plans.serving import problem_plan, problem_scope
 
 
 def srm_output_view(
@@ -43,7 +37,6 @@ def srm_output_view(
     problem_id: str | None = None,
     data_set_id: str | None = None,
     implementation_ids: list[str] | None = None,
-    single_partition: bool | None = None,
 ) -> DataFrame:
     """Dynamic-pivot SRM: rows (test_id, step_id) × implementation columns.
 
@@ -51,29 +44,18 @@ def srm_output_view(
     same order-dependence caveat both engines share (SURVEY.md §7.3.4): dedupe
     (test_id, step_id, implementation_id) upstream when determinism matters.
 
-    ``single_partition`` (default: auto — on iff ``problem_id`` is scoped)
-    coalesces the pruned scan to one partition, so the pivot aggregate and the
-    sort satisfy their distributions without any exchange: the whole query is
-    ONE single-task stage — the interactive per-problem plan. A problem with
-    CI-scale fan-in (≫10⁵ rows) should pass ``False`` to keep the parallel
-    shuffle plan.
-
-    A problem-scoped call on a whole-snapshot read returns the memoized plan
-    for that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
+    Problem-scoped, the pivot aggregate and the sort run in ONE single-task
+    stage, and a call on a whole-snapshot read returns the memoized plan for
+    that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
     problem_plan`).
     """
-    if single_partition is None:
-        single_partition = problem_id is not None
     if implementation_ids is not None:
         implementation_ids = tuple(implementation_ids)
 
     def build() -> DataFrame:
-        scoped = _scoped(observations, data_set_id, problem_id).select(
-            "test_id", "step_id", "implementation_id", "output"
+        pivoted = problem_scope(observations, data_set_id, problem_id).groupBy(
+            "test_id", "step_id"
         )
-        if single_partition:
-            scoped = scoped.coalesce(1)
-        pivoted = scoped.groupBy("test_id", "step_id")
         if implementation_ids is not None:
             pivoted = pivoted.pivot("implementation_id", list(implementation_ids))
         else:
@@ -81,11 +63,7 @@ def srm_output_view(
         return pivoted.agg(F.first("output")).orderBy("test_id", "step_id")
 
     return problem_plan(
-        "srm_output_view",
-        (problem_id, data_set_id, implementation_ids),
-        [observations],
-        build,
-        reusable=problem_id is not None and single_partition,
+        "srm_output_view", data_set_id, problem_id, implementation_ids, [observations], build
     )
 
 
@@ -114,7 +92,7 @@ def srm_output_map(
     shuffled as one value. Duplicate (test,step,impl) cells are first-wins like
     the pivot, achieved by aggregating to ``first`` per key beforehand.
     """
-    scoped = _scoped(observations, data_set_id, problem_id)
+    scoped = problem_scope(observations, data_set_id, problem_id)
     per_cell = scoped.groupBy("test_id", "step_id", "implementation_id").agg(
         F.first("output").alias("output")
     )

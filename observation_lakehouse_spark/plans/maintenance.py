@@ -57,40 +57,6 @@ def compact_sort_partitions(
     compacted.write.mode("overwrite").partitionBy(*PARTITION_COLUMNS).parquet(output_path)
 
 
-def bucket_serving_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_columns: tuple[str, ...] = ("implementation_id",),
-    sort_columns: tuple[str, ...] = SORT_COLUMNS,
-    n_buckets: int = 1,
-) -> DataFrame:
-    """Materialize a bucketed + sorted SERVING copy of a partitioned table.
-
-    The interactive per-problem loop pays a whole extra stage per query for
-    the aggregation exchange, even at shuffle.partitions=1 — the exchange is
-    ~650 rows, but the stage boundary costs a scheduler round-trip every
-    call. A bucketed table declares its on-disk hash distribution to
-    Catalyst: any groupBy / window whose keys contain the bucket columns is
-    satisfied by the scan's outputPartitioning, so the plan is a SINGLE
-    exchange-free stage (verified by tests/test_plans.py). This is the
-    bucketed-layout half of the reference's disabled z-order maintenance
-    (reference olake/lakehouse.py:157-165) — rewrite rarely, serve many.
-
-    ``n_buckets=1`` per partition is right for problem-scoped serving
-    (one ~650-row file per problem); raise it for tables whose partitions
-    are large enough to want parallel single-stage scans. Requires
-    ``saveAsTable`` (bucket metadata lives in the catalog, not the files).
-    """
-    (
-        df.write.mode("overwrite")
-        .partitionBy(*PARTITION_COLUMNS)
-        .bucketBy(n_buckets, *bucket_columns)
-        .sortBy(*sort_columns)
-        .saveAsTable(table_name)
-    )
-    return df.sparkSession.table(table_name)
-
-
 def zorder_value(columns: list, bits: int = 16):
     """Interleaved-bit z-value over N numeric/hashable columns (a Column).
 

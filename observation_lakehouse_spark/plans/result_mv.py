@@ -249,18 +249,13 @@ def srm_map_mv_compute(observations: DataFrame) -> DataFrame:
 
 def clustering_mv_compute(observations: DataFrame) -> DataFrame:
     """Full-corpus behavioral clusters keyed by problem (operators.clustering
-    .behavioral_clustering at corpus grain, parallel shuffle plan)."""
+    .behavioral_clustering at corpus grain, parallel shuffle plan; it groups
+    by data_set_id and problem_id, the MV's partition keys)."""
     from observation_lakehouse_spark.operators.clustering import (
         behavioral_clustering,
     )
 
-    # behavioral_clustering keeps problem_id in its grouping; re-attach
-    # data_set_id per problem for the partition layout (problems are unique
-    # within a data set in the reference's layout).
-    ds_of = observations.select("data_set_id", "problem_id").distinct()
-    return behavioral_clustering(observations, single_partition=False).join(
-        F.broadcast(ds_of), "problem_id"
-    )
+    return behavioral_clustering(observations)
 
 
 def three_way_join_mv_compute(

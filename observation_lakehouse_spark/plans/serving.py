@@ -1,4 +1,5 @@
-"""Interactive serving: memoized per-query plans (prepared-statement analog).
+"""Interactive serving: one plan rule for per-problem queries, and the memo
+of the plans it builds (prepared-statement analog).
 
 The reference's per-problem loop re-binds a DuckDB prepared statement, paying
 parse/plan once. Spark has no bind parameters in the DataFrame API, and a
@@ -7,23 +8,36 @@ freshly-built per-problem DataFrame pays full Catalyst analysis + optimization
 QueryExecution after the first action, so re-executing the SAME object skips
 planning entirely.
 
-:class:`QueryCache` memoizes built DataFrames per (family, parameters). The
-library keeps ONE instance, the plan memo of the four per-problem families
-(``srm_output_view``, ``behavioral_clustering``, ``consensus_oracle``,
-``three_way_join``), used through :func:`problem_plan`.
+The scope picks the plan. :func:`problem_scope` is the one way the four
+per-problem families (``srm_output_view``, ``behavioral_clustering``,
+``consensus_oracle``, ``three_way_join``) and ``srm_output_map`` scope a read:
+partition-key filters (static partition pruning), plus ``coalesce(1)`` iff a
+problem is named. One partition satisfies every aggregate's and sort's
+required distribution, so a problem-scoped plan has no shuffle exchange: the
+aggregation families run as one single-task stage, and the join broadcasts
+its two dimension legs (one problem's code and tests) into that stage.
+Corpus-wide calls keep the parallel shuffle plans.
 
-Snapshot-keyed contract: a frozen plan pins the files it scans, so a plan may
-only be reused while its inputs are the same immutable snapshot. The memo key
-is therefore ``(family, parameters, SnapshotId of every input)``, where a
+:func:`problem_plan` memoizes the families' built DataFrames in ONE library
+:class:`QueryCache`. A call is memoized iff it is problem-scoped and every
+input is a whole-snapshot read. Snapshot-keyed contract: a frozen plan pins
+the files it scans, so a plan may only be reused while its inputs are the
+same immutable snapshot. The memo key is therefore ``(family, scope,
+parameters, SnapshotId of every input)``, where a
 :class:`~observation_lakehouse_spark.transaction.SnapshotId` (table location,
-version, schema, SparkSession) is recorded by every whole-snapshot
-``AtomicParquetTable.read``. A commit, ``add_column``, ``rollback`` or
-``delete_where`` makes the next read a new snapshot, and with it a new key —
-nothing needs invalidating. An input that is not a snapshot read (a catalog
-table, a user frame, a filtered frame) has no identity, so the call bypasses
-the memo and builds as usual. Only problem-scoped, exchange-free plans are
-memoized, so a hit re-executes a frozen one-stage plan: every request still
-runs a Spark job that scans the snapshot's files and recomputes its answer.
+version, manifest stamp, schema, SparkSession) is recorded by every
+whole-snapshot ``AtomicParquetTable.read``. A commit, ``add_column``,
+``rollback`` or ``delete_where`` makes the next read a new snapshot, and with
+it a new key — nothing needs invalidating. An input that is not a snapshot
+read (a catalog table, a user frame, a filtered frame) has no identity, so the
+call bypasses the memo and builds as usual.
+
+What a hit runs: one Spark job that rescans the fact leg's files of that
+snapshot and recomputes the answer. The join's hit may reuse the broadcast
+relations its first run built from the same problem's dimension legs of the
+same immutable snapshot, which are therefore still exact. Corpus-wide plans
+are never memoized: a re-run of a shuffle plan reuses the earlier run's
+shuffle output instead of recomputing it.
 """
 
 from __future__ import annotations
@@ -33,6 +47,7 @@ from collections import OrderedDict
 from collections.abc import Callable, Hashable, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from observation_lakehouse_spark.transaction import snapshot_of
 
@@ -40,8 +55,11 @@ from observation_lakehouse_spark.transaction import snapshot_of
 class QueryCache:
     """Thread-safe LRU memo of built DataFrames keyed by (family, params).
 
-    ``maxsize`` bounds driver memory: each entry holds an analyzed plan
-    (kilobytes), not data — 1024 plans is a few MB.
+    ``maxsize`` bounds driver memory. An entry holds a DataFrame and, once
+    it has run, its executed physical plan: kilobytes of plan and file
+    listing for the aggregation families, plus, for the problem-scoped
+    join, the two broadcast relations built from that problem's code and
+    test rows, which stay on the driver until the entry is evicted.
     """
 
     def __init__(self, maxsize: int = 1024) -> None:
@@ -78,15 +96,6 @@ class QueryCache:
                 self._plans.popitem(last=False)
         return df
 
-    def invalidate(self, family: str | None = None) -> None:
-        """Drop memoized plans (all, or one family's)."""
-        with self._lock:
-            if family is None:
-                self._plans.clear()
-                return
-            for key in [k for k in self._plans if k[0] == family]:
-                del self._plans[key]
-
     def __len__(self) -> int:
         return len(self._plans)
 
@@ -100,26 +109,34 @@ def plan_memo_stats() -> dict[str, int]:
     return {"hits": _PLANS.hits, "misses": _PLANS.misses, "plans": len(_PLANS)}
 
 
+def problem_scope(
+    df: DataFrame, data_set_id: str | None, problem_id: str | None
+) -> DataFrame:
+    """``df`` scoped to a data set and/or problem: partition-key literal
+    filters, so every leg prunes statically to its partitions, then
+    ``coalesce(1)`` iff ``problem_id`` is set — the plan rule above."""
+    if data_set_id is not None:
+        df = df.filter(F.col("data_set_id") == data_set_id)
+    if problem_id is not None:
+        df = df.filter(F.col("problem_id") == problem_id).coalesce(1)
+    return df
+
+
 def problem_plan(
     family: str,
+    data_set_id: str | None,
+    problem_id: str | None,
     params: Hashable,
     inputs: Sequence[DataFrame],
     build: Callable[[], DataFrame],
-    reusable: bool,
 ) -> DataFrame:
-    """``build()``, memoized per (family, params, input snapshots) when the
-    caller declares the plan ``reusable`` and every input is a
-    whole-snapshot read; otherwise a plain ``build()``.
-
-    ``reusable`` means problem-scoped and exchange-free (the families'
-    single-partition plans): re-running such a plan re-scans its inputs.
-    A plan with an exchange is never memoized, because a re-run reuses the
-    shuffle output or broadcast relation of the earlier run instead of
-    recomputing it.
-    """
-    if not reusable:
+    """``build()``, memoized per (family, scope, params, input snapshots)
+    iff ``problem_id`` is set and every input is a whole-snapshot read;
+    otherwise a plain ``build()``. ``build`` must scope its inputs with
+    :func:`problem_scope`, so a memoized plan has no shuffle exchange."""
+    if problem_id is None:
         return build()
     snaps = tuple(snapshot_of(df) for df in inputs)
     if any(s is None for s in snaps):
         return build()
-    return _PLANS.get(family, (params, snaps), build)
+    return _PLANS.get(family, (data_set_id, problem_id, params, snaps), build)

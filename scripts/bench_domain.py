@@ -147,13 +147,9 @@ def main() -> None:
             spark.read.parquet(f"{root}/{t}"), f"{root}/compact_{t}", sort_columns=cols
         )
 
-    # Serving layout note: a bucketed copy (plans/maintenance.
-    # bucket_serving_table) makes these aggregation plans single-stage
-    # (no Exchange — pinned by tests/test_plans.py) and wins ~40% p50 when
-    # the scheduler is contended, but on a QUIET host the 648-row exchange
-    # costs ~10 ms and n_buckets=1 serializes the BATCH job's scan to one
-    # task — so the measured profile here serves from the compacted
-    # file-scan layout and keeps bucketing as the busy-cluster tool.
+    # Serving layout: the compacted file-scan layout. Problem-scoped calls
+    # read their pruned partition as one partition (plans/serving.
+    # problem_scope), so each aggregation plan is one single-task stage.
     obs = spark.read.parquet(f"{root}/compact_observations")
     code = spark.read.parquet(f"{root}/compact_code_implementations")
     tst = spark.read.parquet(f"{root}/compact_tests")
@@ -387,7 +383,6 @@ def main() -> None:
         "profile": {
             "spark.sql.shuffle.partitions": 1,
             "spark.sql.adaptive.enabled": False,
-            "single_partition_plans": True,
             "compacted_partitions": True,
         },
         "srm_rows_per_problem": N_TESTS * N_STEPS,

@@ -4,6 +4,7 @@ same, and build afresh for any other input."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 import textwrap
@@ -28,8 +29,8 @@ from .conftest import N_IMPLS
 IMPLS = [f"impl_{i:02d}_original_0" for i in range(N_IMPLS)]
 
 
-def _families(obs, code, tests):
-    kw = {"problem_id": "p_001", "data_set_id": "DSA"}
+def _families(obs, code, tests, problem_id="p_001"):
+    kw = {"problem_id": problem_id, "data_set_id": "DSA"}
     return {
         "srm": lambda: srm_output_view(obs(), implementation_ids=IMPLS, **kw),
         "clu": lambda: behavioral_clustering(obs(), **kw),
@@ -117,19 +118,56 @@ def test_non_snapshot_inputs_are_never_memoized(spark, lh, observations, tmp_pat
 
 def test_plans_with_exchanges_are_never_memoized(lh):
     obs = lh.table("observations")
-    kw = {"problem_id": "p_000", "data_set_id": "DSA"}
-    before = plan_memo_stats()
-    # corpus-wide and shuffle/broadcast plans: a re-run would reuse the
-    # earlier run's shuffle output or broadcast relation
-    assert behavioral_clustering(obs) is not behavioral_clustering(obs)
-    assert behavioral_clustering(obs, single_partition=False, **kw) is not (
-        behavioral_clustering(obs, single_partition=False, **kw)
-    )
     code, tests = lh.table("code_implementations"), lh.table("tests")
-    assert three_way_join(obs, code, tests, single_partition=False, **kw) is not (
-        three_way_join(obs, code, tests, single_partition=False, **kw)
-    )
+    before = plan_memo_stats()
+    # corpus-wide plans shuffle: a re-run would reuse the earlier run's
+    # shuffle output
+    for name, build in _families(lambda: obs, lambda: code, lambda: tests, problem_id=None).items():
+        assert build() is not build(), name
     assert plan_memo_stats() == before
+
+
+def _exchanges(df):
+    """Exchange operators of ``df``'s executed plan (the final plan when
+    adaptive), in plan order."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"\b(\w*Exchange)\b", plan.split("== Initial Plan ==")[0])
+
+
+def _jobs_of_one_run(spark, df, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("source", ["snapshot", "parquet path"])
+def test_problem_scoped_plans_have_no_shuffle_and_rerun_in_one_job(spark, lh, source, tmp_path):
+    """The plan contract the memo relies on, for every family: a
+    problem-scoped plan has no shuffle exchange (the join's two dimension
+    broadcasts are its only exchanges), and a second run of the returned
+    frame is ONE Spark job. On a whole-snapshot read the returned frame is
+    the memoized one."""
+    names = ("observations", "code_implementations", "tests")
+    if source == "snapshot":
+        table = lh.table
+    else:
+        for name in names:
+            lh.table(name).write.partitionBy("data_set_id", "problem_id").parquet(
+                str(tmp_path / name)
+            )
+        table = lambda name: spark.read.parquet(str(tmp_path / name))  # noqa: E731
+    families = _families(*(lambda name=name: table(name) for name in names))
+    for name, build in families.items():
+        df = build()
+        assert (build() is df) == (source == "snapshot"), name
+        df.collect()
+        want = ["BroadcastExchange"] * 2 if name == "twj" else []
+        assert _exchanges(df) == want, (name, df._jdf.queryExecution().executedPlan().toString())
+        assert _jobs_of_one_run(spark, df, f"plan-contract-{source}-{name}") == 1, name
 
 
 def test_lru_bound_evicts(lh, monkeypatch):

@@ -151,6 +151,32 @@ def test_incremental_refresh_after_append(
     )
 
 
+def test_clustering_mv_keeps_data_sets_sharing_a_problem_id_apart(spark, tmp_path):
+    """Two data sets each have a p_000 with implementations a and b: equal
+    traces in DSA, different traces in DSB. The MV serves each pair the
+    clusters of the scoped direct call — its corpus-wide compute must not
+    merge the two data sets' traces of the same-named problem."""
+    rows = [
+        (ds, "p_000", impl, f"t_{t:02d}()", "", "", "run-0001", "env-0001", step,
+         None, None, f"out_{t}_{step}" if ds == "DSA" or impl == "a" else f"other_{t}_{step}",
+         1.0, None, None, FIXED_TS, None, None, None, False)
+        for ds in ("DSA", "DSB")
+        for impl in ("a", "b")
+        for t in range(2)
+        for step in range(2)
+    ]
+    obs = spark.createDataFrame(rows, OBSERVATIONS_SCHEMA)
+    mv = ProblemResultMV(spark, str(tmp_path / "clu_mv"), clustering_mv_compute)
+    mv.refresh_full(obs)
+    for ds, want in {"DSA": [["a", "b"]], "DSB": [["a"], ["b"]]}.items():
+        direct = behavioral_clustering(obs, problem_id="p_000", data_set_id=ds)
+        assert sorted(r["equivalent_commits_cluster"] for r in direct.collect()) == want, ds
+        served = mv.serve(ds, "p_000")
+        assert rows_of(served, drop=("data_set_id", "problem_id")) == rows_of(
+            direct, drop=("data_set_id", "problem_id")
+        ), ds
+
+
 @pytest.fixture()
 def srm_mv(spark, observations, tmp_path):
     mv = ProblemResultMV(spark, str(tmp_path / "srm_only"), srm_map_mv_compute)
