@@ -91,17 +91,22 @@ def srm_output_map(
     distinct-scan for column discovery, no schema explosion, and the map is
     shuffled as one value. Duplicate (test,step,impl) cells are first-wins like
     the pivot, achieved by aggregating to ``first`` per key beforehand.
+
+    Rows are keyed by ``(data_set_id, problem_id, test_id, step_id)`` at every
+    scope, so a corpus-wide call keeps each problem's rows apart — the
+    columns of the SRM result MV, which is this call on its source.
     """
+    keys = ["data_set_id", "problem_id", "test_id", "step_id"]
     scoped = problem_scope(observations, data_set_id, problem_id)
-    per_cell = scoped.groupBy("test_id", "step_id", "implementation_id").agg(
+    per_cell = scoped.groupBy(*keys, "implementation_id").agg(
         F.first("output").alias("output")
     )
     return (
-        per_cell.groupBy("test_id", "step_id")
+        per_cell.groupBy(*keys)
         .agg(
             F.map_from_entries(
                 F.array_sort(F.collect_list(F.struct("implementation_id", "output")))
             ).alias("outputs")
         )
-        .orderBy("test_id", "step_id")
+        .orderBy(*keys)
     )

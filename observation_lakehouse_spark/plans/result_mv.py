@@ -234,17 +234,11 @@ def _files_in_partitions(
 
 
 def srm_map_mv_compute(observations: DataFrame) -> DataFrame:
-    """Full-corpus SRM map rows keyed by problem (operators.srm.srm_output_map
-    at corpus grain): map<implementation_id, output> per (problem, test,
-    step), duplicate cells first-wins like the pivot."""
-    per_cell = observations.groupBy(
-        "data_set_id", "problem_id", "test_id", "step_id", "implementation_id"
-    ).agg(F.first("output").alias("output"))
-    return per_cell.groupBy("data_set_id", "problem_id", "test_id", "step_id").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("implementation_id", "output")))
-        ).alias("outputs")
-    )
+    """Full-corpus SRM map rows keyed by problem: ``srm_output_map`` at corpus
+    grain, whose output columns are the MV's."""
+    from observation_lakehouse_spark.operators.srm import srm_output_map
+
+    return srm_output_map(observations)
 
 
 def clustering_mv_compute(observations: DataFrame) -> DataFrame:
@@ -261,15 +255,11 @@ def clustering_mv_compute(observations: DataFrame) -> DataFrame:
 def three_way_join_mv_compute(
     code_implementations: DataFrame, tests: DataFrame
 ) -> Callable[[DataFrame], DataFrame]:
-    """Full-corpus three-way join keyed by problem. Dimension legs are
-    captured; the returned compute prunes them to the SAME problem subset as
-    the observations source (per-problem locality holds leg-wise)."""
+    """Full-corpus three-way join keyed by problem, dimension legs captured.
+    The compute is the plain join: the join keys include the partition
+    columns, so Catalyst infers the source's partition filters onto both
+    dimension scans and a refresh reads only the touched problems' code and
+    tests."""
     from observation_lakehouse_spark.operators.joins import three_way_join
 
-    def compute(observations: DataFrame) -> DataFrame:
-        probs = observations.select(*PARTITION_COLS).distinct()
-        code = code_implementations.join(F.broadcast(probs), list(PARTITION_COLS))
-        tst = tests.join(F.broadcast(probs), list(PARTITION_COLS))
-        return three_way_join(observations, code, tst)
-
-    return compute
+    return lambda observations: three_way_join(observations, code_implementations, tests)

@@ -5,15 +5,25 @@ The reference's appends are atomic Iceberg snapshot commits
 its readers scan Iceberg metadata. Format jars are absent from this container,
 so :class:`AtomicParquetTable` re-creates the two properties a user hits first
 without them — crash atomicity and snapshot isolation — with nothing but
-parquet files and an append-only manifest log:
+parquet files and append-only JSON logs:
 
 Layout::
 
     <location>/
-      _schema.json            table schema + partition columns (written once)
+      _schema.json            table metadata at creation: schema, partition
+                              columns, CHECK constraints (version 0)
+      _schema.v<N>.json       metadata version N: the whole metadata after the
+                              N-th edit (add_column, constraint or bloom DDL)
       _manifests/v<N>.json    snapshot N: cumulative data-file list + commits
+      _refs/<name>.json       named tag or branch: {"type", "version"}
       data/<k=v dirs>/<uuid>-part-*.parquet
       _deletes/<uuid>/        position deletion vectors (row-level deletes)
+
+Every durable change is published one way (:func:`_publish`): a temp file
+hard-linked to its final name, create-if-absent, so of two racing
+publishers exactly one wins (on an object store, a conditional PUT). Both
+versioned logs advance by claiming version N+1 that way; a loser re-reads
+the new head and retries (optimistic concurrency, the Iceberg commit loop).
 
 Protocol (writer):
 
@@ -23,12 +33,12 @@ Protocol (writer):
    Renames are per-file atomic on a posix filesystem; the files are INVISIBLE
    to readers until a manifest lists them, so a crash mid-move leaks orphan
    bytes (vacuum reclaims them) but never a partial table state.
-3. Commit: write snapshot ``v<N+1>`` (parent's files + the new ones) to a temp
-   file and publish it with ``os.link`` — create-if-absent, so two concurrent
-   committers cannot both claim version N+1; the loser re-reads the new head
-   and retries (optimistic concurrency, the Iceberg commit loop). On an object
-   store the link step maps to a conditional PUT (put-if-absent); everything
-   else is already rename-free.
+3. Commit: publish snapshot ``v<N+1>`` (parent's files + the new ones).
+
+Table metadata is read from its log, not held by a handle: every operation
+reads the schema, CHECK constraints and bloom columns from the latest
+metadata version, as it reads the head manifest, so an edit through any
+handle or process is seen by the next operation of every other.
 
 Readers load the highest committed manifest and scan exactly its file list
 (``basePath`` keeps partition-column parsing and pruning), so they see every
@@ -106,6 +116,33 @@ def snapshot_of(df: DataFrame) -> SnapshotId | None:
     return _SNAPSHOT_READS.get(df)
 
 
+# attempts a writer makes to claim the next version of a versioned log (the
+# snapshot manifests, the schema metadata) before raising CommitConflict
+_COMMIT_RETRIES = 20
+
+
+def _publish(path: Path, payload: dict) -> bool:
+    """Create ``path`` holding ``payload`` as JSON iff it is absent — the
+    table format's one durable publish (module doc). Returns whether this
+    call created it; the temp file is always removed."""
+    tmp = path.parent / f".{uuid.uuid4().hex}.tmp"
+    tmp.write_text(json.dumps(payload))
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def _log_versions(directory: Path, prefix: str) -> list[int]:
+    """Sorted versions N of the ``<prefix>N.json`` files in ``directory``:
+    the one scan both versioned logs find their head with."""
+    names = [n for n in os.listdir(directory) if n.startswith(prefix) and n.endswith(".json")]
+    return sorted(int(v) for n in names if (v := n[len(prefix) : -len(".json")]).isdigit())
+
+
 def _read_manifest(location: Path, version: int) -> dict:
     if version == 0:
         return {"version": 0, "files": [], "commits": {}}
@@ -133,6 +170,13 @@ class CheckViolation(RuntimeError):
         self.violations = violations
 
 
+class _TableMeta(NamedTuple):  # one parsed metadata version
+    schema: StructType
+    partition_by: tuple[str, ...]
+    check_constraints: dict[str, str]
+    bloom_columns: list[str]
+
+
 class AtomicParquetTable:
     """A parquet directory with manifest-committed snapshots (see module doc)."""
 
@@ -145,35 +189,27 @@ class AtomicParquetTable:
         location: str,
         schema: StructType | None = None,
         partition_by: tuple[str, ...] = (),
-        max_commit_retries: int = 20,
     ) -> None:
         self.spark = spark
         self.location = Path(location)
         self.manifest_dir = self.location / "_manifests"
         self.data_dir = self.location / "data"
-        self.max_commit_retries = max_commit_retries
         from observation_lakehouse_spark.plans.serving import QueryCache
 
         self._reads = QueryCache(self._READ_MEMO_SIZE)
-        schema_file = self.location / "_schema.json"
-        if schema_file.exists():
-            _, meta = self._read_schema_meta()
-            self.schema = StructType.fromJson(meta["schema"])
-            self.partition_by = tuple(meta["partition_by"])
-            # back-compat: tables created before CHECK support have no key
-            self.check_constraints: dict[str, str] = dict(
-                meta.get("check_constraints", {})
-            )
-        elif schema is not None:
+        self._meta_memo: tuple[tuple, _TableMeta] | None = None
+        if not self._schema_path(0).exists():
+            if schema is None:
+                raise ValueError(f"no table at {location} and no schema given to create one")
             self._reject_reserved_columns(schema)
             self.manifest_dir.mkdir(parents=True, exist_ok=True)
             self.data_dir.mkdir(parents=True, exist_ok=True)
-            self.schema = schema
-            self.partition_by = tuple(partition_by)
-            self.check_constraints = {}
-            self._write_schema_file()
-        else:
-            raise ValueError(f"no table at {location} and no schema given to create one")
+            # a racing creator's publish may win; its metadata then defines
+            # the table, as for any later open
+            meta = {"schema": schema.jsonValue(), "partition_by": list(partition_by)}
+            _publish(self._schema_path(0), {**meta, "check_constraints": {}})
+        # fixed at creation, so safe to hold on the handle
+        self.partition_by = self._meta().partition_by
 
     _RESERVED_COLUMNS = frozenset({"_file", "_pos"})
 
@@ -193,58 +229,64 @@ class AtomicParquetTable:
                 "identity (_file/_pos); rename them before creating the table"
             )
 
-    def _write_schema_file(self) -> None:
-        schema_file = self.location / "_schema.json"
-        tmp = schema_file.with_suffix(f".{uuid.uuid4().hex}.tmp")
-        tmp.write_text(
-            json.dumps(
-                {
-                    "schema": self.schema.jsonValue(),
-                    "partition_by": list(self.partition_by),
-                    "check_constraints": self.check_constraints,
-                }
+    # -- table metadata (versioned, create-if-absent — mirrors _commit) -------
+
+    def _schema_path(self, version: int) -> Path:
+        # version 0 is the creation-time metadata
+        return self.location / ("_schema.json" if version == 0 else f"_schema.v{version}.json")
+
+    def _schema_version(self) -> int:
+        vs = _log_versions(self.location, "_schema.v")
+        return vs[-1] if vs else 0
+
+    def _meta(self) -> _TableMeta:
+        """The table's metadata at its latest version. Read from the log on
+        every call (a directory listing plus a stat) and parsed once per
+        version and file stamp, so an edit through any handle is seen by the
+        next operation of this one."""
+        path = self._schema_path(self._schema_version())
+        st = os.stat(path)
+        key = (path.name, st.st_ino, st.st_mtime_ns)
+        memo = self._meta_memo
+        if memo is None or memo[0] != key:
+            raw = json.loads(path.read_text())
+            memo = self._meta_memo = (
+                key,
+                _TableMeta(
+                    StructType.fromJson(raw["schema"]),
+                    tuple(raw["partition_by"]),
+                    # back-compat: tables created before CHECK support have no key
+                    dict(raw.get("check_constraints", {})),
+                    list(raw.get("bloom_columns", [])),
+                ),
             )
-        )
-        tmp.rename(schema_file)
+        return memo[1]
 
-    # -- schema metadata (versioned, create-if-absent — mirrors _commit) ------
+    @property
+    def schema(self) -> StructType:
+        """The table schema at the latest metadata version."""
+        return self._meta().schema
 
-    def _read_schema_meta(self) -> tuple[int, dict]:
-        """Latest schema metadata: the highest ``_schema.v{N}.json`` if any
-        metadata edit has ever happened, else the creation-time
-        ``_schema.json`` (version 0)."""
-        best_v, best_p = 0, None
-        for p in self.location.glob("_schema.v*.json"):
-            tail = p.stem.rsplit(".v", 1)
-            if len(tail) == 2 and tail[1].isdigit() and int(tail[1]) >= best_v:
-                best_v, best_p = int(tail[1]), p
-        if best_p is None:
-            return 0, json.loads((self.location / "_schema.json").read_text())
-        return best_v, json.loads(best_p.read_text())
+    @property
+    def check_constraints(self) -> dict[str, str]:
+        """Declared CHECK constraints (name → predicate SQL) at the latest
+        metadata version."""
+        return dict(self._meta().check_constraints)
 
-    def _mutate_schema_meta(self, mutate) -> dict:
-        """Serialize schema-metadata edits through the same ``os.link``
-        create-if-absent versioned protocol the manifest and refs use
-        (r6 advice): re-read the LATEST metadata, apply ``mutate`` to it,
-        claim the next version. A racing edit loses the claim and re-applies
-        onto the winner's state — two concurrent constraint declarations
-        both land instead of last-writer-wins silently dropping one."""
-        for _ in range(self.max_commit_retries):
-            v, meta = self._read_schema_meta()
-            meta = mutate(dict(meta))
-            target = self.location / f"_schema.v{v + 1}.json"
-            tmp = self.location / f".{uuid.uuid4().hex}.tmp"
-            tmp.write_text(json.dumps(meta))
-            try:
-                os.link(tmp, target)  # atomic claim of metadata version v+1
-                return meta
-            except FileExistsError:
-                continue  # another editor won; rebase onto their state
-            finally:
-                tmp.unlink(missing_ok=True)
-        raise CommitConflict(
-            f"gave up after {self.max_commit_retries} schema-metadata attempts"
-        )
+    def _mutate_schema_meta(self, mutate) -> None:
+        """Serialize metadata edits through the same create-if-absent
+        versioned protocol the manifest uses (r6 advice): re-read the LATEST
+        metadata, apply ``mutate`` to it, claim the next version. A racing
+        edit loses the claim and re-applies onto the winner's state — two
+        concurrent constraint declarations both land instead of
+        last-writer-wins silently dropping one."""
+        for _ in range(_COMMIT_RETRIES):
+            v = self._schema_version()
+            meta = mutate(json.loads(self._schema_path(v).read_text()))
+            if _publish(self._schema_path(v + 1), meta):
+                return
+            # another editor won; rebase onto their state
+        raise CommitConflict(f"gave up after {_COMMIT_RETRIES} schema-metadata attempts")
 
     # -- CHECK constraints ----------------------------------------------------
 
@@ -274,8 +316,7 @@ class AtomicParquetTable:
             meta["check_constraints"] = cons
             return meta
 
-        meta = self._mutate_schema_meta(declare)
-        self.check_constraints = dict(meta["check_constraints"])
+        self._mutate_schema_meta(declare)
 
     def drop_check_constraint(self, name: str) -> None:
         if name not in self.check_constraints:
@@ -287,8 +328,7 @@ class AtomicParquetTable:
             meta["check_constraints"] = cons
             return meta
 
-        meta = self._mutate_schema_meta(drop)
-        self.check_constraints = dict(meta["check_constraints"])
+        self._mutate_schema_meta(drop)
 
     def _check_violations(
         self, df: DataFrame, constraints: dict[str, str]
@@ -316,9 +356,7 @@ class AtomicParquetTable:
     # -- snapshot log ---------------------------------------------------------
 
     def _versions(self) -> list[int]:
-        return sorted(
-            int(p.stem[1:]) for p in self.manifest_dir.glob("v*.json") if p.stem[1:].isdigit()
-        )
+        return _log_versions(self.manifest_dir, "v")
 
     def latest_version(self) -> int:
         """Highest committed snapshot version (0 = empty table)."""
@@ -353,11 +391,12 @@ class AtomicParquetTable:
         # CHECK constraints gate the commit: one aggregate pass over the
         # batch (cast to table types first, so the predicate sees what would
         # land on disk); a violation raises with NOTHING staged.
-        if self.check_constraints:
+        meta = self._meta()
+        if meta.check_constraints:
             typed = df.select(
-                [df[f.name].cast(f.dataType).alias(f.name) for f in self.schema.fields]
+                [df[f.name].cast(f.dataType).alias(f.name) for f in meta.schema.fields]
             )
-            bad = self._check_violations(typed, self.check_constraints)
+            bad = self._check_violations(typed, meta.check_constraints)
             if bad:
                 raise CheckViolation(str(self.location), bad)
 
@@ -550,8 +589,7 @@ class AtomicParquetTable:
         self._mutate_schema_meta(declare)
 
     def bloom_columns(self) -> list[str]:
-        _, meta = self._read_schema_meta()
-        return list(meta.get("bloom_columns", []))
+        return list(self._meta().bloom_columns)
 
     @staticmethod
     def _bloom_keys(value) -> set[str]:
@@ -677,21 +715,13 @@ class AtomicParquetTable:
         which is what makes it safe to apply opportunistically."""
         v = self.latest_version() if version is None else version
         m = self._manifest(v)
-        stats = m.get("stats", {})
         blooms = m.get("blooms", {})
-        keep = []
-        for f in m["files"]:
-            s = stats.get(f, {}).get(column)
-            if s is not None:
-                try:
-                    if value < s[0] or value > s[1]:
-                        continue
-                except TypeError:
-                    pass
-            b = blooms.get(f, {}).get(column)
-            if b is not None and not self._bloom_maybe_contains(b, value):
-                continue
-            keep.append(f)
+        keep = [
+            f
+            for f in self._prune_by_stats(m, column, value, value)
+            if (b := blooms.get(f, {}).get(column)) is None
+            or self._bloom_maybe_contains(b, value)
+        ]
         from pyspark.sql import functions as F
 
         return self._scan_files(keep, m).filter(F.col(column) == F.lit(value))
@@ -718,13 +748,14 @@ class AtomicParquetTable:
         """Snapshot file scan carrying (_file, _pos) row identity."""
         from pyspark.sql import functions as F
 
+        schema = self.schema
         df = (
-            self.spark.read.schema(self.schema)
+            self.spark.read.schema(schema)
             .option("basePath", str(self.data_dir))
             .parquet(*[str(self.data_dir / f) for f in files])
         )
         return df.select(
-            *[f.name for f in self.schema.fields],
+            *schema.fieldNames(),
             self._rel_file_col().alias("_file"),
             F.col("_metadata.row_index").alias("_pos"),
         )
@@ -836,7 +867,8 @@ class AtomicParquetTable:
         updated rows exactly like :meth:`append`."""
         from pyspark.sql import functions as F
 
-        unknown = set(assignments) - {f.name for f in self.schema.fields}
+        meta = self._meta()
+        unknown = set(assignments) - set(meta.schema.fieldNames())
         if unknown:
             raise ValueError(f"assignments target unknown columns: {sorted(unknown)}")
         head_v = self.latest_version()
@@ -850,11 +882,11 @@ class AtomicParquetTable:
                 F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
                 if f.name in assignments
                 else F.col(f.name)
-                for f in self.schema.fields
+                for f in meta.schema.fields
             ]
         )
-        if self.check_constraints:
-            bad = self._check_violations(updated, self.check_constraints)
+        if meta.check_constraints:
+            bad = self._check_violations(updated, meta.check_constraints)
             if bad:
                 raise CheckViolation(str(self.location), bad)
         name, n, files_hit = self._write_delete_sidecar(
@@ -929,7 +961,8 @@ class AtomicParquetTable:
                 "matched_clauses and when_matched_update/when_matched_delete "
                 "are mutually exclusive spellings of the WHEN MATCHED ladder"
             )
-        schema_names = {f.name for f in self.schema.fields}
+        meta = self._meta()
+        schema_names = set(meta.schema.fieldNames())
 
         def _norm(clauses: list[dict], namespace: str) -> list[dict]:
             out = []
@@ -1004,7 +1037,7 @@ class AtomicParquetTable:
             if not when_not_matched_insert:
                 return {"version": head_v, **no_op}
             inserts = src_pref.select(
-                [F.col(f"src_{f.name}").alias(f.name) for f in self.schema.fields]
+                [F.col(f"src_{f.name}").alias(f.name) for f in meta.schema.fields]
             )
             n_ins = inserts.count()
             if n_ins == 0:
@@ -1038,7 +1071,7 @@ class AtomicParquetTable:
                             F.expr(cl["set"][f.name]).cast(f.dataType).alias(f.name)
                             if f.name in cl["set"]
                             else F.col(f.name)
-                            for f in self.schema.fields
+                            for f in meta.schema.fields
                         ]
                     )
                 )
@@ -1130,12 +1163,12 @@ class AtomicParquetTable:
             ).select(
                 [
                     F.col(f"src_{f.name}").cast(f.dataType).alias(f.name)
-                    for f in self.schema.fields
+                    for f in meta.schema.fields
                 ]
             )
             new_rows = inserts if new_rows is None else new_rows.unionByName(inserts)
-        if self.check_constraints and new_rows is not None:
-            bad = self._check_violations(new_rows, self.check_constraints)
+        if meta.check_constraints and new_rows is not None:
+            bad = self._check_violations(new_rows, meta.check_constraints)
             if bad:
                 raise CheckViolation(str(self.location), bad)
         name, n_dv, files_hit = (None, 0, [])
@@ -1190,14 +1223,15 @@ class AtomicParquetTable:
         # retry loop (a file's footer never changes, so conflicts only re-merge
         # the parent-carried entries). In the replace case only files the
         # current head doesn't already know are footer-read.
-        known = self._manifest(self.latest_version()).get("stats", {})
+        known = self._manifest(self.latest_version())
         candidates = new_files if replace_files is None else replace_files
-        fresh_stats = self._collect_stats([f for f in candidates if f not in known])
-        known_blooms = self._manifest(self.latest_version()).get("blooms", {})
-        fresh_blooms = self._collect_blooms(
-            [f for f in candidates if f not in known_blooms]
+        fresh_stats = self._collect_stats(
+            [f for f in candidates if f not in known.get("stats", {})]
         )
-        for _ in range(self.max_commit_retries):
+        fresh_blooms = self._collect_blooms(
+            [f for f in candidates if f not in known.get("blooms", {})]
+        )
+        for _ in range(_COMMIT_RETRIES):
             head_v = self.latest_version()
             head = self._manifest(head_v)
             if idempotency_key is not None and idempotency_key in head["commits"]:
@@ -1254,17 +1288,10 @@ class AtomicParquetTable:
                 )},
                 "committed_at": time.time(),
             }
-            target = self.manifest_dir / f"v{next_v}.json"
-            tmp = self.manifest_dir / f".{uuid.uuid4().hex}.tmp"
-            tmp.write_text(json.dumps(manifest))
-            try:
-                os.link(tmp, target)  # atomic claim of version next_v
+            if _publish(self.manifest_dir / f"v{next_v}.json", manifest):
                 return next_v
-            except FileExistsError:
-                continue  # another committer won; rebase on the new head
-            finally:
-                tmp.unlink(missing_ok=True)
-        raise CommitConflict(f"gave up after {self.max_commit_retries} commit attempts")
+            # another committer won; rebase on the new head
+        raise CommitConflict(f"gave up after {_COMMIT_RETRIES} commit attempts")
 
     # -- reads ----------------------------------------------------------------
 
@@ -1319,13 +1346,36 @@ class AtomicParquetTable:
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
         """Scan exactly ``files`` (``manifest``'s deletion vectors applied),
         columns in schema order; no files gives the empty frame."""
+        schema = self.schema
         if not files:
-            return self.spark.createDataFrame([], self.schema)
-        cols = [f.name for f in self.schema.fields]
+            return self.spark.createDataFrame([], schema)
+        cols = schema.fieldNames()
         if manifest.get("deletes"):
             return self._apply_deletes(self._read_with_pos(files), manifest).select(cols)
-        reader = self.spark.read.schema(self.schema).option("basePath", str(self.data_dir))
+        reader = self.spark.read.schema(schema).option("basePath", str(self.data_dir))
         return reader.parquet(*[str(self.data_dir / f) for f in files]).select(cols)
+
+    @staticmethod
+    def _prune_by_stats(manifest: dict, column: str, lower, upper) -> list[str]:
+        """``manifest``'s files whose [min, max] stats for ``column`` may hold
+        a value in ``[lower, upper]`` (``None`` = unbounded). Pruning must
+        never be a correctness dependency: a file without stats, or whose
+        stat values aren't comparable to the bounds (schema evolution left
+        str/int stats mixed across files, or a numeric bound probes a string
+        column), is kept and the caller's residual filter decides."""
+        stats = manifest.get("stats", {})
+        keep = []
+        for f in manifest["files"]:
+            s = stats.get(f, {}).get(column)
+            try:
+                if s is not None and (
+                    (lower is not None and s[1] < lower) or (upper is not None and s[0] > upper)
+                ):
+                    continue
+            except TypeError:
+                pass
+            keep.append(f)
+        return keep
 
     def scan(
         self,
@@ -1348,26 +1398,7 @@ class AtomicParquetTable:
             raise ValueError("scan() needs lower and/or upper — use read() for full scans")
         v = self.latest_version() if version is None else version
         m = self._manifest(v)
-        stats = m.get("stats", {})
-        keep = []
-        for f in m["files"]:
-            s = stats.get(f, {}).get(column)
-            if s is not None:
-                mn, mx = s
-                # Pruning must never be a correctness dependency: if the stat
-                # values aren't comparable to the caller's bounds (schema
-                # evolution left str/int stats mixed across files, or a
-                # numeric bound probes a string column), keep the file and
-                # let the residual filter decide.
-                try:
-                    if (lower is not None and mx < lower) or (
-                        upper is not None and mn > upper
-                    ):
-                        continue
-                except TypeError:
-                    pass
-            keep.append(f)
-        df = self._scan_files(keep, m)
+        df = self._scan_files(self._prune_by_stats(m, column, lower, upper), m)
         from pyspark.sql import functions as F
 
         if lower is not None:
@@ -1389,34 +1420,42 @@ class AtomicParquetTable:
         retract them from this log (deletes are snapshot-level state, not
         change events — diff two snapshots if you need retractions).
         """
-        to_v = self.latest_version() if to_version is None else to_version
+        base, target = self._append_only_range(since_version, to_version)
+        known = set(base["files"])
+        # as appended: the target's deletion vectors are not applied
+        return self._scan_files([f for f in target["files"] if f not in known], {})
+
+    def _append_only_range(
+        self, since_version: int, to_version: int | None
+    ) -> tuple[dict, dict]:
+        """The base and target manifests of ``since_version..to_version``
+        (default: head), after checking that both snapshots exist and that
+        every commit in the range only added files. Diffing just the
+        endpoints would miss a replace that rewrites a file added within the
+        range (v2 appends f1, v3 replaces f1 with g: the endpoints diff
+        clean, but g is not appended data), so each intermediate manifest
+        must be a superset of its parent's file set."""
+        versions = self._versions()
+        to_v = (versions[-1] if versions else 0) if to_version is None else to_version
         for v in (since_version, to_v):
-            if v != 0 and v not in self._versions():
+            if v != 0 and v not in versions:
                 raise ValueError(f"no snapshot v{v}")
         if to_v < since_version:
             raise ValueError(f"to_version v{to_v} precedes since_version v{since_version}")
-        base = set(self._manifest(since_version)["files"])
-        target = self._manifest(to_v)["files"]
-        # Append-only means EVERY step in the chain only adds files. Diffing
-        # just the endpoints misses a replace that rewrites a file added
-        # within the range (v2 appends f1, v3 replaces f1 with g: endpoints
-        # diff clean, but g is not pure appended data). Walk each
-        # intermediate manifest and require it to be a superset of its
-        # parent's file set.
-        chain = sorted(v for v in self._versions() if since_version < v <= to_v)
-        prev_files = base
-        for v in chain:
-            cur_files = set(self._manifest(v)["files"])
-            removed = prev_files - cur_files
-            if removed:
-                raise ValueError(
-                    f"v{since_version}..v{to_v} is not append-only (v{v} removed "
-                    f"{len(removed)} file(s) via a replace/rollback); diff the two "
-                    "snapshot reads instead"
-                )
-            prev_files = cur_files
-        # as appended: the target's deletion vectors are not applied
-        return self._scan_files([f for f in target if f not in base], {})
+        base = target = self._manifest(since_version)
+        prev = set(base["files"])
+        for v in versions:
+            if since_version < v <= to_v:
+                target = self._manifest(v)
+                cur = set(target["files"])
+                if prev - cur:
+                    raise ValueError(
+                        f"v{since_version}..v{to_v} is not append-only (v{v} removed "
+                        f"{len(prev - cur)} file(s) via a replace/rollback); diff the "
+                        "two snapshot reads instead"
+                    )
+                prev = cur
+        return base, target
 
     def read_change_feed(
         self, since_version: int, to_version: int | None = None
@@ -1443,33 +1482,12 @@ class AtomicParquetTable:
         """
         from pyspark.sql import functions as F
 
-        to_v = self.latest_version() if to_version is None else to_version
-        for v in (since_version, to_v):
-            if v != 0 and v not in self._versions():
-                raise ValueError(f"no snapshot v{v}")
-        if to_v < since_version:
-            raise ValueError(
-                f"to_version v{to_v} precedes since_version v{since_version}"
-            )
-        base_m = self._manifest(since_version)
-        to_m = self._manifest(to_v)
+        base_m, to_m = self._append_only_range(since_version, to_version)
         base = set(base_m["files"])
-        chain = sorted(v for v in self._versions() if since_version < v <= to_v)
-        prev_files = base
-        for v in chain:
-            cur_files = set(self._manifest(v)["files"])
-            if prev_files - cur_files:
-                raise ValueError(
-                    f"v{since_version}..v{to_v} removed files (replace/"
-                    "rollback) — the change feed is not expressible; diff "
-                    "the two snapshot reads instead"
-                )
-            prev_files = cur_files
-        cols = [f.name for f in self.schema.fields]
+        schema = self.schema
         tag = lambda df, t: df.select(  # noqa: E731
-            F.lit(t).alias("_change_type"), *cols
+            F.lit(t).alias("_change_type"), *schema.fieldNames()
         )
-        empty = self.spark.createDataFrame([], self.schema)
         # inserts: added files, minus target-DV-retracted positions
         added = [f for f in to_m["files"] if f not in base]
         if added:
@@ -1499,7 +1517,7 @@ class AtomicParquetTable:
                     (rows["_file"] == dv["file"]) & (rows["_pos"] == dv["pos"]),
                     "left_semi",
                 )
-        out = tag(empty, "insert").limit(0)
+        out = tag(self.spark.createDataFrame([], schema), "insert").limit(0)
         if ins is not None:
             out = out.unionByName(tag(ins, "insert"))
         if dels is not None:
@@ -1534,9 +1552,7 @@ class AtomicParquetTable:
             ).jsonValue()
             return meta
 
-        meta = self._mutate_schema_meta(widen)
-        self.schema = StructType.fromJson(meta["schema"])
-        self.check_constraints = dict(meta.get("check_constraints", {}))
+        self._mutate_schema_meta(widen)
 
     def committed_keys(self) -> dict[str, int]:
         """Idempotency keys recorded so far → committing version."""
@@ -1664,31 +1680,22 @@ class AtomicParquetTable:
                 "carried": len(carried),
                 "version": head_v,
             }
-        total = sum((self.data_dir / f).stat().st_size for f in to_rewrite)
-        if any(f in head_deletes for f in to_rewrite):
-            # merge-on-read becomes copy-on-write here: the rewrite drops
-            # DV'd positions, so the new files need no deletion vectors
-            df = self._apply_deletes(self._read_with_pos(to_rewrite), head_m).select(
-                [f.name for f in self.schema.fields]
-            )
-        else:
-            reader = self.spark.read.schema(self.schema).option(
-                "basePath", str(self.data_dir)
-            )
-            df = reader.parquet(*[str(self.data_dir / f) for f in to_rewrite]).select(
-                [f.name for f in self.schema.fields]
-            )
-        if self.partition_by:
-            from pyspark.sql import functions as F
+        from pyspark.sql import functions as F
 
+        total = sum((self.data_dir / f).stat().st_size for f in to_rewrite)
+        # merge-on-read becomes copy-on-write here: the rewrite drops DV'd
+        # positions, so the new files need no deletion vectors
+        df = self._scan_files(
+            to_rewrite,
+            {"deletes": {f: head_deletes[f] for f in to_rewrite if f in head_deletes}},
+        )
+        if self.partition_by:
             # one write task per partition key (hash may co-locate several
             # keys in a task; the partitioned writer still splits by dir)
             df = df.repartition(*[F.col(c) for c in self.partition_by])
         else:
             df = df.coalesce(max(1, -(-total // target_file_bytes)))
         if zorder_by:
-            from pyspark.sql import functions as F
-
             from observation_lakehouse_spark.plans.maintenance import zorder_value
 
             # Delta OPTIMIZE ZORDER BY: rank-bucket each z column with a
@@ -1752,25 +1759,22 @@ class AtomicParquetTable:
             raise ValueError(f"no snapshot v{v} to reference")
         return v
 
+    def _create_ref(self, name: str, kind: str, version: int | None) -> int:
+        """Publish ref ``name`` of type ``kind`` at ``version`` (default: the
+        head). Creation is create-if-absent (:func:`_publish`), so two racing
+        creators of one name cannot both win."""
+        v = self._check_ref_version(version)
+        if not _publish(self._ref_file(name), {"type": kind, "version": v}):
+            raise ValueError(f"ref {name!r} already exists")
+        return v
+
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under an immutable name (Iceberg tag). Tagged
         versions survive :meth:`expire_snapshots` (and therefore keep their
         data files through :meth:`vacuum`) until the tag is deleted — the
         audit/repro use case: ``create_tag('train-corpus-2026q3')`` freezes
-        exactly what a training run read. Creation is an ``os.link``
-        create-if-absent claim, so two racing creators of one name cannot
-        both win (same primitive as the manifest commit)."""
-        v = self._check_ref_version(version)
-        target = self._ref_file(name)
-        tmp = self._refs_dir() / f".{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps({"type": "tag", "version": v}))
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            raise ValueError(f"ref {name!r} already exists") from None
-        finally:
-            tmp.unlink(missing_ok=True)
-        return v
+        exactly what a training run read."""
+        return self._create_ref(name, "tag", version)
 
     def create_branch(self, name: str, version: int | None = None) -> int:
         """A MOVABLE named pointer (Iceberg branch ref). Honest scope note:
@@ -1779,17 +1783,7 @@ class AtomicParquetTable:
         advanceable pointer (create at a version, :meth:`advance_branch` as
         work lands, :meth:`read` with ``ref=`` to serve it), which covers
         the audit/staging workflow without a second commit log."""
-        v = self._check_ref_version(version)
-        target = self._ref_file(name)
-        tmp = self._refs_dir() / f".{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps({"type": "branch", "version": v}))
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            raise ValueError(f"ref {name!r} already exists") from None
-        finally:
-            tmp.unlink(missing_ok=True)
-        return v
+        return self._create_ref(name, "branch", version)
 
     def advance_branch(self, name: str, version: int | None = None) -> int:
         """Move a branch pointer (defaults to the current head). Atomic

@@ -286,20 +286,10 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     batch_ms: dict[str, float] = {}
-    from observation_lakehouse_spark.operators import srm_output_map  # noqa: F401
-
-    def batch_srm():
-        per_cell = obs.groupBy(
-            "problem_id", "test_id", "step_id", "implementation_id"
-        ).agg(F.first("output").alias("output"))
-        return per_cell.groupBy("problem_id", "test_id", "step_id").agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("implementation_id", "output")))
-            ).alias("outputs")
-        )
+    from observation_lakehouse_spark.operators import srm_output_map
 
     batch_families = {
-        "srm_output_view": batch_srm,
+        "srm_output_view": lambda: srm_output_map(obs, data_set_id="DSA"),
         "behavioral_clustering": lambda: behavioral_clustering(
             obs, data_set_id="DSA"
         ),

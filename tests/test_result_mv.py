@@ -444,3 +444,60 @@ def test_refresh_cost_tracks_touched_partition_count(spark, tmp_path):
     touched = [("DSA", "p_0"), ("DSA", "p_1")]
     t_scoped = wall(lambda: mv.refresh_problems(obs, touched))
     assert t_scoped < 0.6 * t_full, (t_scoped, t_full)
+
+
+def test_corpus_wide_srm_map_is_the_union_of_problem_maps(observations):
+    """A corpus-wide ``srm_output_map`` keys its rows by problem: it equals
+    the union of the problem-scoped maps (it used to merge every problem's
+    cells into one row per (test, step))."""
+    from .conftest import N_STEPS, N_TESTS
+
+    whole = rows_of(srm_output_map(observations))
+    per_problem = sorted(
+        row
+        for p in range(N_PROBLEMS)
+        for row in rows_of(srm_output_map(observations, problem_id=f"p_{p:03d}", data_set_id="DSA"))
+    )
+    assert len(whole) == N_PROBLEMS * N_TESTS * N_STEPS
+    assert whole == per_problem
+
+
+def test_join_mv_refresh_prunes_dimension_legs_by_inference(
+    spark, observations, code_implementations, tests_table, tmp_path
+):
+    """The join MV's refresh compute is the plain join on the
+    touched-partition source: no aggregate in its plan, and Catalyst infers
+    the touched partitions onto both dimension scans as partition filters."""
+    from observation_lakehouse_spark.plans.result_mv import touched_partitions_filter
+    from observation_lakehouse_spark.transaction import AtomicParquetTable
+
+    tables = {}
+    for name, df in (
+        ("obs", observations),
+        ("code", code_implementations),
+        ("tests", tests_table),
+    ):
+        tables[name] = AtomicParquetTable(
+            spark, str(tmp_path / name), schema=df.schema,
+            partition_by=("data_set_id", "problem_id"),
+        )
+        tables[name].append(df)
+    probs = [("DSA", "p_001"), ("DSA", "p_003")]
+    compute = three_way_join_mv_compute(tables["code"].read(), tables["tests"].read())
+    out = compute(tables["obs"].read().filter(touched_partitions_filter(probs)))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" not in plan
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    for leg, read_schema in (
+        ("code", "struct<implementation_id:string,source_code:string,language:string>"),
+        ("tests", "struct<test_id:string,source_code:string>"),
+    ):
+        leg_scans = [s for s in scans if s.endswith(f"ReadSchema: {read_schema}")]
+        assert leg_scans, leg
+        for scan in leg_scans:
+            filters = scan.split("PartitionFilters: [", 1)[1]
+            assert "= DSA)" in filters and "IN (p_001,p_003)" in filters, leg
+    direct = three_way_join(
+        tables["obs"].read(), tables["code"].read(), tables["tests"].read()
+    ).filter(touched_partitions_filter(probs))
+    assert rows_of(out) == rows_of(direct)

@@ -557,6 +557,83 @@ def test_duplicate_constraint_name_rejected_across_handles(spark, table):
         b.add_check_constraint("c1", "run_id >= 0")
 
 
+def test_check_declared_through_one_handle_gates_an_earlier_handle(spark, table):
+    """Table metadata is read from its log on every operation: a handle
+    opened BEFORE another handle declared a CHECK still enforces it."""
+    from observation_lakehouse_spark.transaction import CheckViolation
+
+    table.append(_batch(spark, "dsA", 0, 4))
+    early = AtomicParquetTable(spark, str(table.location))
+    table.add_check_constraint("score_nonneg", "score >= 0")
+    assert early.check_constraints == {"score_nonneg": "score >= 0"}
+    bad = spark.createDataFrame([("dsA", "p0", 50, -5.0)], SCHEMA)
+    with pytest.raises(CheckViolation):
+        early.append(bad)
+    assert table.read().filter("score < 0").count() == 0
+    assert table.latest_version() == 1
+
+
+def test_column_added_through_one_handle_is_written_by_an_earlier_handle(spark, table):
+    """A handle opened before ``add_column`` through another handle writes
+    the new column (not NULL) and reads it back."""
+    table.append(_batch(spark, "dsA", 0, 4))
+    early = AtomicParquetTable(spark, str(table.location))
+    table.add_column("extra", "string")
+    early.append(_batch(spark, "dsB", 100, 2).withColumn("extra", F.lit("hello")))
+    got = early.read()
+    assert "extra" in got.columns
+    assert sorted(r["extra"] for r in got.filter("data_set_id = 'dsB'").collect()) == [
+        "hello",
+        "hello",
+    ]
+    assert table.read().filter("extra = 'hello'").count() == 2
+    # like any handle, it rejects a batch lacking a column the table has
+    with pytest.raises(Exception, match="extra"):
+        early.append(_batch(spark, "dsC", 200, 1))
+
+
+def test_racing_ref_creators_one_winner_per_name(spark, tmp_path):
+    """Threads race to create one tag name and one branch name: each name is
+    published once, every other creator raises "already exists", and no
+    temp file is left behind."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = _mk_refs(spark, tmp_path, "refs_race")
+    t.append(spark.createDataFrame([(1,)], "x long"))
+    n = 8
+    barrier = threading.Barrier(n)
+
+    def race(i: int) -> dict[str, str]:
+        barrier.wait()
+        out = {}
+        for name, create in (("pin", t.create_tag), ("work", t.create_branch)):
+            try:
+                create(name)
+                out[name] = "won"
+            except ValueError as e:
+                out[name] = str(e)
+        return out
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            results = list(pool.map(race, range(n), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    for name in ("pin", "work"):
+        outcomes = [r[name] for r in results]
+        assert outcomes.count("won") == 1, name
+        assert all("already exists" in o for o in outcomes if o != "won"), name
+    assert t.refs() == {
+        "pin": {"type": "tag", "version": 1},
+        "work": {"type": "branch", "version": 1},
+    }
+    assert list(t.location.rglob("*.tmp")) == []
+
+
 def test_bloom_index_prunes_point_lookups_exactly(spark, tmp_path):
     """r8 bloom file-skipping: on a high-cardinality UNCLUSTERED key every
     file spans the whole min/max range (zone maps keep everything), but the
