@@ -44,9 +44,8 @@ def three_way_join(
     small legs anyway: its first run builds two broadcast relations of one
     problem's rows, then one single-task stage scans and probes the fact leg.
     A problem-scoped call on whole-snapshot reads is memoized per snapshot
-    (:func:`~observation_lakehouse_spark.plans.serving.problem_plan`); a
-    repeat runs one job that rescans the fact leg and reuses the broadcast
-    relations of the same immutable snapshot.
+    (:func:`~observation_lakehouse_spark.plans.serving.problem_plan`),
+    which persists the joined rows: a repeat runs one job that reads them.
     """
 
     def build() -> DataFrame:

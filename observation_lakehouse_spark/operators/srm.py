@@ -46,8 +46,8 @@ def srm_output_view(
 
     Problem-scoped, the pivot aggregate and the sort run in ONE single-task
     stage, and a call on a whole-snapshot read returns the memoized plan for
-    that snapshot (:func:`~observation_lakehouse_spark.plans.serving.
-    problem_plan`).
+    that snapshot, whose answer stays cached (:func:`~observation_lakehouse_spark.
+    plans.serving.problem_plan`).
     """
     if implementation_ids is not None:
         implementation_ids = tuple(implementation_ids)

@@ -32,9 +32,11 @@ from __future__ import annotations
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType
 
 from observation_lakehouse_spark.transaction import (
     AtomicParquetTable,
+    change_files,
     partition_values,
     snapshot_files,
     snapshot_of,
@@ -139,24 +141,29 @@ class ProblemResultMV:
     ) -> list[tuple[str, str]]:
         """Refresh the partitions ``delta``'s rows name; returns them.
 
-        Delta-refresh scope: the touched-partition probe, the scoped
-        recompute and the stage write run with AQE off (AQE otherwise runs
-        each exchange as its own adaptive stage-job) at a width sized from
-        file bytes instead of the session width. The probe reads only the
-        delta; the recompute re-reads the touched source partitions WHOLE,
-        so its width also counts their files — a KB append into a GB
-        partition must not recompute at width 1. Non-file deltas fall back
-        to full parallelism (size unknown, not zero)."""
+        A :meth:`~AtomicParquetTable.read_changes` delta names them in its
+        files' paths (:func:`_partitions_of_changes`), so it needs no job;
+        any other delta is probed with a ``distinct`` job over its partition
+        columns. Delta-refresh scope: the probe, the scoped recompute and the
+        stage write run with AQE off (AQE otherwise runs each exchange as its
+        own adaptive stage-job) at a width sized from file bytes instead of
+        the session width. The probe reads only the delta; the recompute
+        re-reads the touched source partitions WHOLE, so its width also
+        counts their files — a KB append into a GB partition must not
+        recompute at width 1. Non-file deltas fall back to full parallelism
+        (size unknown, not zero)."""
         from observation_lakehouse_spark.plans.incremental import (
             _refresh_scope,
             _refresh_width,
         )
 
-        with _refresh_scope(self.spark, _refresh_width(self.spark, delta)):
-            touched = [
-                (r["data_set_id"], r["problem_id"])
-                for r in delta.select(*PARTITION_COLS).distinct().collect()
-            ]
+        touched = _partitions_of_changes(delta)
+        if touched is None:
+            with _refresh_scope(self.spark, _refresh_width(self.spark, delta)):
+                touched = [
+                    (r["data_set_id"], r["problem_id"])
+                    for r in delta.select(*PARTITION_COLS).distinct().collect()
+                ]
         if touched:
             width = _refresh_width(
                 self.spark, delta, files=_files_in_partitions(source, touched)
@@ -167,8 +174,9 @@ class ProblemResultMV:
 
     def refresh_after_append(self, source: DataFrame, appended: DataFrame) -> None:
         """The append hook: refresh exactly the partitions the appended rows
-        touch (their distinct (data_set_id, problem_id) pairs — a few rows
-        collected, never data)."""
+        touch — read from the file paths of a ``read_changes`` delta, else
+        their distinct (data_set_id, problem_id) pairs, a few rows collected,
+        never data."""
         self._refresh_touched(source, appended)
 
     def refresh_from_change_feed(
@@ -212,6 +220,25 @@ class ProblemResultMV:
         files, picked from the latest snapshot's manifest. A problem with no
         materialized rows returns an empty frame with the MV schema."""
         return self._built().read(partitions=[(data_set_id, problem_id)])
+
+
+def _partitions_of_changes(delta: DataFrame) -> list[tuple[str, str]] | None:
+    """The (data_set_id, problem_id) pairs a ``read_changes`` delta touches,
+    decoded from its files' ``k=v`` directories (no job); ``None`` for any
+    other delta, or when a file's path lacks either key or a key is not a
+    string column (a decoded directory is a string)."""
+    files = change_files(delta)
+    if files is None or any(
+        not isinstance(delta.schema[c].dataType, StringType) for c in PARTITION_COLS
+    ):
+        return None
+    pairs = {}
+    for f in files:
+        pv = partition_values(f)
+        if any(c not in pv for c in PARTITION_COLS):
+            return None
+        pairs[tuple(pv[c] for c in PARTITION_COLS)] = None
+    return list(pairs)
 
 
 def _files_in_partitions(

@@ -32,12 +32,23 @@ it a new key — nothing needs invalidating. An input that is not a snapshot
 read (a catalog table, a user frame, a filtered frame) has no identity, so the
 call bypasses the memo and builds as usual.
 
-What a hit runs: one Spark job that rescans the fact leg's files of that
-snapshot and recomputes the answer. The join's hit may reuse the broadcast
-relations its first run built from the same problem's dimension legs of the
-same immutable snapshot, which are therefore still exact. Corpus-wide plans
-are never memoized: a re-run of a shuffle plan reuses the earlier run's
-shuffle output instead of recomputing it.
+What a hit runs: one Spark job that reads the answer's cached batches, with
+no file scan and no recompute. The memo key pins an immutable snapshot, so
+the answer under a key cannot change, and keeping it is as exact as keeping
+the plan: a miss persists the frame it stores (``StorageLevel.MEMORY_ONLY``)
+before its first action, and that first run materializes the result. The
+miss therefore runs one more job than an uncached plan (adaptive execution
+materializes the cache as its own query stage, then reads it), and its build
+plans the query, which an uncached build leaves to the first action. Both are
+Spark's cache manager at work; neither has a switch short of turning
+adaptive execution off for the whole session. Built on a
+memoized clustering, ``consensus_oracle`` reads the cached clustering result.
+Spark's unified memory manager bounds the cached bytes: under pressure it
+drops least-recently-used blocks, and a dropped block recomputes from the
+snapshot's files on its next read. The memo's ``maxsize`` bounds the entries;
+a result the memo drops is unpersisted. Corpus-wide plans are never memoized
+or persisted: a re-run of a shuffle plan reuses the earlier run's shuffle
+output instead of recomputing it.
 """
 
 from __future__ import annotations
@@ -46,6 +57,8 @@ import threading
 from collections import OrderedDict
 from collections.abc import Callable, Hashable, Sequence
 
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,11 +68,18 @@ from observation_lakehouse_spark.transaction import snapshot_of
 class QueryCache:
     """Thread-safe LRU memo of built DataFrames keyed by (family, params).
 
-    ``maxsize`` bounds driver memory. An entry holds a DataFrame and, once
+    ``maxsize`` bounds the entries. An entry holds a DataFrame and, once
     it has run, its executed physical plan: kilobytes of plan and file
     listing for the aggregation families, plus, for the problem-scoped
     join, the two broadcast relations built from that problem's code and
-    test rows, which stay on the driver until the entry is evicted.
+    test rows, which stay on the driver until the entry is evicted. An
+    entry of :func:`problem_plan` also holds its answer's cached result
+    blocks (block-manager memory, bounded by Spark), which are unpersisted
+    when the entry is evicted; other frames (the table format's memoized
+    reads) are never persisted and are left alone. The loser of two racing
+    misses is dropped as it is: its plan equals the stored one, so Spark's
+    cache manager holds ONE entry for both (persisting an equal plan again
+    is a no-op), and unpersisting the loser would drop the winner's cache.
     """
 
     def __init__(self, maxsize: int = 1024) -> None:
@@ -92,12 +112,25 @@ class QueryCache:
         with self._lock:
             df = self._plans.setdefault(key, df)
             self._plans.move_to_end(key)
+            evicted = []
             while len(self._plans) > self.maxsize:
-                self._plans.popitem(last=False)
+                evicted.append(self._plans.popitem(last=False)[1])
+        for old in evicted:
+            _release(old)
         return df
 
     def __len__(self) -> int:
         return len(self._plans)
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist ``df`` iff it was persisted. A frame of a stopped session
+    has no cache left to drop, and its unpersist fails in the JVM."""
+    if df.is_cached:
+        try:
+            df.unpersist()
+        except Py4JError:
+            pass
 
 
 _PLANS = QueryCache()
@@ -131,12 +164,17 @@ def problem_plan(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """``build()``, memoized per (family, scope, params, input snapshots)
-    iff ``problem_id`` is set and every input is a whole-snapshot read;
-    otherwise a plain ``build()``. ``build`` must scope its inputs with
-    :func:`problem_scope`, so a memoized plan has no shuffle exchange."""
+    and persisted iff ``problem_id`` is set and every input is a
+    whole-snapshot read; otherwise a plain ``build()``. ``build`` must scope
+    its inputs with :func:`problem_scope`, so a memoized plan has no shuffle
+    exchange."""
     if problem_id is None:
         return build()
     snaps = tuple(snapshot_of(df) for df in inputs)
     if any(s is None for s in snaps):
         return build()
-    return _PLANS.get(family, (data_set_id, problem_id, params, snaps), build)
+    return _PLANS.get(
+        family,
+        (data_set_id, problem_id, params, snaps),
+        lambda: build().persist(StorageLevel.MEMORY_ONLY),
+    )

@@ -116,6 +116,19 @@ def snapshot_of(df: DataFrame) -> SnapshotId | None:
     return _SNAPSHOT_READS.get(df)
 
 
+# frame returned by read_changes -> the manifest-relative data files it scans;
+# weak keys, like _SNAPSHOT_READS
+_CHANGE_READS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def change_files(df: DataFrame) -> list[str] | None:
+    """The data files (manifest-relative) ``df`` scans iff it is a frame
+    :meth:`AtomicParquetTable.read_changes` returned, else ``None``: the
+    files' ``k=v`` directories name every partition the delta touches,
+    without a job."""
+    return _CHANGE_READS.get(df)
+
+
 # attempts a writer makes to claim the next version of a versioned log (the
 # snapshot manifests, the schema metadata) before raising CommitConflict
 _COMMIT_RETRIES = 20
@@ -1419,11 +1432,15 @@ class AtomicParquetTable:
         Rows are reported AS APPENDED: a later :meth:`delete_where` doesn't
         retract them from this log (deletes are snapshot-level state, not
         change events — diff two snapshots if you need retractions).
+        The frame's file list is recorded (:func:`change_files`).
         """
         base, target = self._append_only_range(since_version, to_version)
         known = set(base["files"])
+        files = [f for f in target["files"] if f not in known]
         # as appended: the target's deletion vectors are not applied
-        return self._scan_files([f for f in target["files"] if f not in known], {})
+        df = self._scan_files(files, {})
+        _CHANGE_READS[df] = files
+        return df
 
     def _append_only_range(
         self, since_version: int, to_version: int | None

@@ -8,10 +8,12 @@ import re
 import subprocess
 import sys
 import textwrap
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from observation_lakehouse_spark.lakehouse import ObservationLakehouse
@@ -24,7 +26,7 @@ from observation_lakehouse_spark.operators import (
 from observation_lakehouse_spark.plans import serving
 from observation_lakehouse_spark.plans.serving import QueryCache, plan_memo_stats
 
-from .conftest import N_IMPLS
+from .conftest import N_IMPLS, N_PROBLEMS
 
 IMPLS = [f"impl_{i:02d}_original_0" for i in range(N_IMPLS)]
 
@@ -114,6 +116,7 @@ def test_non_snapshot_inputs_are_never_memoized(spark, lh, observations, tmp_pat
         b = behavioral_clustering(obs(), problem_id="p_000", data_set_id="DSA")
         assert a is not b, name
         assert plan_memo_stats() == before, name
+        assert not (a.is_cached or b.is_cached), name  # nor persisted
 
 
 def test_plans_with_exchanges_are_never_memoized(lh):
@@ -123,7 +126,9 @@ def test_plans_with_exchanges_are_never_memoized(lh):
     # corpus-wide plans shuffle: a re-run would reuse the earlier run's
     # shuffle output
     for name, build in _families(lambda: obs, lambda: code, lambda: tests, problem_id=None).items():
-        assert build() is not build(), name
+        a, b = build(), build()
+        assert a is not b, name
+        assert not (a.is_cached or b.is_cached), name  # nor persisted
     assert plan_memo_stats() == before
 
 
@@ -217,15 +222,20 @@ def test_concurrent_callers_share_one_plan(lh):
 def test_no_plan_survives_a_restarted_session(tmp_path):
     """Stop and restart the SparkSession in a separate process (the test
     session must stay up): a lakehouse re-opened on the new session misses
-    the memo and answers from the new session."""
+    the memo and answers from the new session, and evicting the stopped
+    session's persisted result does not raise."""
     script = textwrap.dedent(
         f"""
         from pyspark.sql import SparkSession
         from observation_lakehouse_spark.lakehouse import ObservationLakehouse
         from observation_lakehouse_spark.operators import behavioral_clustering
+        from observation_lakehouse_spark.plans import serving
         from observation_lakehouse_spark.plans.serving import plan_memo_stats
         from observation_lakehouse_spark.schemas import OBSERVATIONS_SCHEMA
         from tests.conftest import observation_rows
+
+        # one entry: the new session's plan evicts the stopped session's
+        serving._PLANS = serving.QueryCache(maxsize=1)
 
         def session():
             return (SparkSession.builder.master("local[1]")
@@ -247,6 +257,7 @@ def test_no_plan_survives_a_restarted_session(tmp_path):
         spark = session()
         new, n_new = query(spark)
         assert new is not old and n_new == n_old == 3, (n_old, n_new)
+        assert new.is_cached and not old.is_cached  # released without raising
         assert plan_memo_stats()["misses"] == 2
         spark.stop()
         print("ok")
@@ -257,3 +268,202 @@ def test_no_plan_survives_a_restarted_session(tmp_path):
         [sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=600
     )
     assert out.returncode == 0 and out.stdout.strip().endswith("ok"), out.stderr[-3000:]
+
+
+# -- the result memo: a memoized plan persists its answer ----------------------
+
+
+@pytest.fixture()
+def fresh_memo(spark, monkeypatch):
+    """An empty plan memo over an empty Spark cache: every first call of a
+    key misses and caches its answer anew."""
+    spark.catalog.clearCache()
+    monkeypatch.setattr(serving, "_PLANS", QueryCache())
+    yield
+    spark.catalog.clearCache()
+
+
+def _persisted(spark):
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _cached(spark):
+    """{rdd id: (cached bytes, cached partitions)} of the RDDs holding
+    blocks (``getRDDStorageInfo``)."""
+    return {
+        r.id(): (r.memSize() + r.diskSize(), r.numCachedPartitions())
+        for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
+def _run(spark, df, group):
+    """Rows of one run of ``df``, its Spark job count and the bytes and
+    records its stages read, from the status store."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    read = [0, 0]
+    for job in jobs:
+        stages = store.job(job).stageIds()
+        for i in range(stages.size()):
+            st = store.lastStageAttempt(stages.apply(i))
+            if st.status().toString() != "SKIPPED":
+                read[0] += st.inputBytes()
+                read[1] += st.inputRecords()
+    return rows, len(jobs), tuple(read)
+
+
+def _snapshot_families(lh, problem_id):
+    return _families(
+        lambda: lh.table("observations"),
+        lambda: lh.table("code_implementations"),
+        lambda: lh.table("tests"),
+        problem_id=problem_id,
+    )
+
+
+def test_miss_persists_the_result_and_a_hit_reads_only_its_cache(spark, lh, fresh_memo):
+    """A miss stores a frame persisted at MEMORY_ONLY, and its first run
+    caches the answer. A hit is then one job whose every input byte is a
+    cached block of that answer: the status store reports no file input."""
+    for name, build in _snapshot_families(lh, "p_002").items():
+        misses = plan_memo_stats()["misses"]
+        df = build()
+        assert plan_memo_stats()["misses"] == misses + 1, name
+        assert df.is_cached, name
+        assert df.storageLevel == StorageLevel.MEMORY_ONLY, (name, df.storageLevel)
+        before = _cached(spark)
+        want = df.collect()
+        new = {i: c for i, c in _cached(spark).items() if i not in before}
+        assert len(new) == 1, (name, new)  # consensus reads clustering's cache
+        (cached_bytes, batches), = new.values()
+        again = build()
+        assert again is df, name
+        rows, jobs, read = _run(spark, again, f"result-memo-hit-{name}")
+        assert rows == want, name
+        assert jobs == 1, name
+        assert read == (cached_bytes, batches), (name, read, cached_bytes, batches)
+
+
+def test_lru_eviction_unpersists_the_evicted_result(spark, lh, fresh_memo, monkeypatch):
+    monkeypatch.setattr(serving, "_PLANS", QueryCache(maxsize=2))
+    obs = lh.table("observations")
+    frames, rdds = {}, {}
+    for p in ("p_000", "p_001"):
+        before = _persisted(spark)
+        frames[p] = behavioral_clustering(obs, problem_id=p, data_set_id="DSA")
+        frames[p].collect()
+        (rdds[p],) = _persisted(spark) - before
+    behavioral_clustering(obs, problem_id="p_002", data_set_id="DSA")  # evicts p_000
+    assert not frames["p_000"].is_cached
+    assert frames["p_000"].storageLevel == StorageLevel.NONE
+    assert rdds["p_000"] not in _persisted(spark)
+    assert frames["p_001"].storageLevel == StorageLevel.MEMORY_ONLY
+    assert rdds["p_001"] in _persisted(spark)
+    # the table format's memoized reads share the class but are never
+    # persisted: evicting one leaves it as it is
+    reads = QueryCache(maxsize=1)
+    first = reads.get("read", 1, lambda: lh.table("tests"))
+    reads.get("read", 2, lambda: lh.table("tests").select("*"))
+    assert not first.is_cached and len(reads) == 1
+
+
+def test_racing_misses_leave_one_persisted_result(spark, lh, fresh_memo, monkeypatch):
+    """Eight threads on one key, more than the cores, with a short switch
+    interval, each held after its build until all eight have built, so all
+    eight miss: one stored frame, every thread its rows, one persisted RDD,
+    and the stored frame's cache survives the seven losing frames."""
+    built = threading.Barrier(8)
+
+    class RacingCache(QueryCache):
+        def get(self, family, params, builder):
+            def build():
+                df = builder()
+                built.wait(timeout=300)
+                return df
+
+            return super().get(family, params, build)
+
+    monkeypatch.setattr(serving, "_PLANS", RacingCache())
+    expect = behavioral_clustering(
+        lh.table("observations").select("*"), problem_id="p_001", data_set_id="DSA"
+    ).collect()
+    before = _persisted(spark)
+    start = threading.Barrier(8)
+
+    def call(_):
+        start.wait()
+        df = behavioral_clustering(lh.table("observations"), problem_id="p_001", data_set_id="DSA")
+        return df, df.collect()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(call, range(8), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert plan_memo_stats()["misses"] == 8
+    assert len({id(df) for df, _ in results}) == 1
+    assert all(rows == expect for _, rows in results)
+    assert len(_persisted(spark) - before) == 1
+    assert results[0][0].storageLevel == StorageLevel.MEMORY_ONLY
+
+
+def test_memoized_frame_after_clear_cache_answers_and_leaks_nothing(spark, lh, fresh_memo):
+    """``spark.catalog.clearCache()`` drops every cached answer behind the
+    memo's back. A memoized frame still answers correctly, and its runs
+    leave no persisted RDD that no cache entry tracks."""
+    frames = _snapshot_families(lh, "p_003")
+    want = {name: build().collect() for name, build in frames.items()}
+    spark.catalog.clearCache()
+    # what survives the clear was persisted outside the cache manager (an
+    # earlier test's localCheckpoint, say)
+    kept = _persisted(spark)
+    for name, build in frames.items():
+        for _ in range(2):
+            assert build().collect() == want[name], name
+    assert _persisted(spark) == kept and set(_cached(spark)) <= kept
+
+
+@pytest.mark.parametrize("problem", [f"p_{p:03d}" for p in range(N_PROBLEMS)])
+def test_miss_hit_and_fresh_build_return_identical_rows(spark, lh, fresh_memo, problem):
+    """Differential: for every problem and family, the miss (which caches
+    the answer), the hit (which reads it) and a non-memoized build return
+    the same rows in the same order."""
+    fresh = _families(
+        lambda: lh.table("observations").select("*"),
+        lambda: lh.table("code_implementations").select("*"),
+        lambda: lh.table("tests").select("*"),
+        problem_id=problem,
+    )
+    for name, build in _snapshot_families(lh, problem).items():
+        miss = build().collect()
+        hit = build().collect()
+        assert miss == hit == fresh[name]().collect(), name
+
+
+def test_consensus_miss_reads_the_cached_clustering(spark, lh, fresh_memo):
+    """``consensus_oracle`` is the memoized clustering plus ``limit(1)``: a
+    consensus miss after the clustering is cached reads only cached blocks,
+    and answers like a non-memoized build."""
+    obs = lh.table("observations")
+    before = _cached(spark)
+    clustering = behavioral_clustering(obs, problem_id="p_002", data_set_id="DSA")
+    clustering.collect()
+    ((clu_bytes, _),) = (c for i, c in _cached(spark).items() if i not in before)
+    before = _cached(spark)
+    consensus = consensus_oracle(obs, problem_id="p_002", data_set_id="DSA")
+    rows, _, (read_bytes, _) = _run(spark, consensus, "consensus-miss")
+    ((con_bytes, _),) = (c for i, c in _cached(spark).items() if i not in before)
+    # the miss caches consensus from clustering's blocks, then reads its own
+    assert read_bytes == clu_bytes + con_bytes, (read_bytes, clu_bytes, con_bytes)
+    fresh = consensus_oracle(obs.select("*"), problem_id="p_002", data_set_id="DSA")
+    assert rows == fresh.collect() == clustering.collect()[:1]

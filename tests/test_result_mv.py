@@ -151,6 +151,52 @@ def test_incremental_refresh_after_append(
     )
 
 
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_refresh_from_read_changes_runs_no_probe_job(spark, observations, tmp_path):
+    """A ``read_changes`` delta names the partitions it touches in its files'
+    paths, so an MV refresh from it runs one job fewer than the same
+    refresh from an equal plain frame, whose touched partitions need the
+    ``distinct`` probe. The served rows still equal the direct operator,
+    for a problem id the partitioned writer escapes too."""
+    from observation_lakehouse_spark.plans.result_mv import PARTITION_COLS, _partitions_of_changes
+    from observation_lakehouse_spark.transaction import AtomicParquetTable
+
+    src = AtomicParquetTable(
+        spark, str(tmp_path / "obs"), schema=OBSERVATIONS_SCHEMA, partition_by=PARTITION_COLS
+    )
+    src.append(observations)
+    v = src.latest_version()
+    batch = spark.createDataFrame(_appended_rows(), OBSERVATIONS_SCHEMA)
+    escaped = batch.filter(F.col("problem_id") == "p_900").withColumn("problem_id", F.lit("p:9/01"))
+    src.append(batch.unionByName(escaped))
+    delta = src.read_changes(v)
+    touched = [("DSA", "p:9/01"), ("DSA", "p_001"), ("DSA", "p_900")]
+    assert sorted(_partitions_of_changes(delta)) == touched
+    assert _partitions_of_changes(delta.select("*")) is None
+    computes = {"srm": srm_map_mv_compute, "clu": clustering_mv_compute}
+    for name, compute in computes.items():
+        jobs = {}
+        for kind, d in (("changes", delta), ("frame", delta.select("*"))):
+            mv = ProblemResultMV(spark, str(tmp_path / f"{name}_{kind}"), compute)
+            mv.refresh_full(src.read(version=v))
+            jobs[kind] = _jobs(
+                spark, f"refresh-{name}-{kind}", lambda: mv.refresh_after_append(src.read(), d)
+            )
+            for _, pid in touched + [("DSA", "p_000")]:
+                _assert_serve_matches({name: mv}, src.read(), None, None, [pid])
+        assert jobs["changes"] == jobs["frame"] - 1, (name, jobs)
+
+
 def test_clustering_mv_keeps_data_sets_sharing_a_problem_id_apart(spark, tmp_path):
     """Two data sets each have a p_000 with implementations a and b: equal
     traces in DSA, different traces in DSB. The MV serves each pair the

@@ -108,7 +108,7 @@ def test_concurrent_committers_both_land(spark, tmp_path):
     assert got.select("data_set_id").distinct().count() == 3
 
 
-def test_same_key_racing_committers_commit_once(spark, tmp_path):
+def test_same_key_racing_committers_commit_once(spark, tmp_path, monkeypatch):
     """Zombie-driver replay: two committers carry the SAME idempotency key and
     the zombie reads the head BEFORE the live driver commits. The zombie's
     version claim must lose the os.link race, rebase, find the key in the new
@@ -116,24 +116,38 @@ def test_same_key_racing_committers_commit_once(spark, tmp_path):
     and return the live driver's version — never publishing a second commit."""
     from pyspark.sql.types import _parse_datatype_string
 
+    from observation_lakehouse_spark import transaction
+
     loc = str(tmp_path / "t")
     a = AtomicParquetTable(spark, loc, schema=_parse_datatype_string(SCHEMA),
                            partition_by=("data_set_id", "problem_id"))
     b = AtomicParquetTable(spark, loc)
     staged = b.stage(_batch(spark, "dsA", 0, 4))  # zombie stages from empty base
     v_live = a.append(_batch(spark, "dsA", 0, 4), idempotency_key="cdc:b0")
-    # Zombie believes head is still 0 for its first read, forcing it to claim
-    # the version the live driver already owns, lose the link, and rebase.
+    # Zombie believes head is still 0 through its first commit attempt: the
+    # pre-loop stats read and the loop's first head read are stale, so it
+    # claims the version the live driver already owns, loses the link, and
+    # rebases onto the real head.
     real = b.latest_version
     calls = {"n": 0}
 
     def stale_then_real():
         calls["n"] += 1
-        return 0 if calls["n"] == 1 else real()
+        return 0 if calls["n"] <= 2 else real()
 
+    publishes = []
+    real_publish = transaction._publish
+
+    def recorded_publish(path, payload):
+        won = real_publish(path, payload)
+        publishes.append((path.name, won))
+        return won
+
+    monkeypatch.setattr(transaction, "_publish", recorded_publish)
     b.latest_version = stale_then_real
     v_zombie = b._commit(staged, "cdc:b0")
     b.latest_version = real
+    assert publishes == [("v1.json", False)]  # one lost claim, then the key
     assert v_live == v_zombie == 1
     assert b.latest_version() == 1  # no second commit published
     assert b.read().count() == 4
