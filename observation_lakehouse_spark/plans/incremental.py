@@ -75,10 +75,10 @@ def _refresh_width(
     spark: SparkSession,
     *frames: DataFrame | None,
     state: DataFrame | None = None,
-    files: list[str] = (),
 ) -> int:
-    """Shuffle width for one refresh: ceil(input bytes /
-    ``_REFRESH_BYTES_PER_PART`` = 1 MB), clamped to [1, defaultParallelism].
+    """Shuffle width for one :class:`IncrementalAggregate` refresh:
+    ceil(input bytes / ``_REFRESH_BYTES_PER_PART`` = 1 MB), clamped to [1,
+    defaultParallelism].
     Derived from the frames' own input files (driver-side stat of the
     already-listed FileIndex — no job), so a KB-sized delta refreshes at
     width 1-4 while a TB-sized delta uses every core.
@@ -90,9 +90,6 @@ def _refresh_width(
     delta into a large state must not run the state∪delta union-agg at
     width 1): its bytes count toward the width, but its empty file list
     means a genuinely empty NEW view (0 bytes), not unknown.
-    ``files`` are further input files the refresh re-reads, counted as
-    given (a result-MV refresh passes the touched source partitions' files:
-    its recompute reads them whole, however small the delta).
     """
     par = spark.sparkContext.defaultParallelism
     cap = par * _REFRESH_BYTES_PER_PART
@@ -110,7 +107,6 @@ def _refresh_width(
     listings = itertools.chain(
         (_paths(df, False) for df in frames if df is not None),
         (_paths(st, True) for st in [state] if st is not None),
-        [files],
     )
     total = 0
     for paths in listings:

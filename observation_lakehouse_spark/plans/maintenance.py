@@ -78,6 +78,29 @@ def zorder_value(columns: list, bits: int = 16):
     return z
 
 
+def zorder_key(df: DataFrame, columns: tuple[str, ...], bits: int = 8):
+    """The Morton value (a Column) of ``df``'s ``columns``, each rank-bucketed
+    to ``bits`` bits by a GLOBAL approx-quantile bucketing (value
+    distribution independent): the sort key of every Z-order rewrite.
+
+    The quantile pass is one aggregate per column over ``df`` (approx, 1e-3
+    relative error), cheap relative to the rewrite (scan + fixed-size
+    sketch). The per-row bucket lookup counts the boundaries <= the value
+    through a literal array + filter size (codegen, no UDF) — a
+    2^bits-element filter, fine for a periodic rewrite job, NOT a
+    query-path expression."""
+    from pyspark.sql import functions as F
+
+    n_buckets = 1 << bits
+    bucketed = []
+    for c in columns:
+        qs = df.stat.approxQuantile(c, [i / n_buckets for i in range(1, n_buckets)], 0.001)
+        arr = F.array(*[F.lit(float(q)) for q in qs])
+        rank = F.size(F.filter(arr, lambda b: b <= F.col(c).cast("double")))
+        bucketed.append(rank.cast("long"))
+    return zorder_value(bucketed, bits=bits)
+
+
 def zorder_partitions(
     df: DataFrame,
     output_path: str,
@@ -90,34 +113,16 @@ def zorder_partitions(
     The reference designed exactly this and disabled it pending a rewrite
     story (reference olake/lakehouse.py:157-165 "FIXME z-ordering"); Delta's
     OPTIMIZE ZORDER and Iceberg's sort-order rewrite are the managed-format
-    equivalents. Here: rank-bucket each z column to ``bits`` bits with a
-    GLOBAL approx-quantile bucketing (value distribution independent), build
-    the Morton value, and rewrite each (data_set_id, problem_id) partition
-    sorted by it. Multi-column range scans then skip row groups on any
-    z-dimension via parquet min/max stats.
+    equivalents. Here: rewrite each (data_set_id, problem_id) partition
+    sorted by :func:`zorder_key`. Multi-column range scans then skip row
+    groups on any z-dimension via parquet min/max stats.
 
-    The quantile pass is one aggregate over the z columns (approx, 1e-3
-    relative error); the rewrite is the same one-shuffle repartition the
-    linear compaction uses. ``bits=8`` (256 buckets/dimension) keeps the
-    boundary array a small literal — z-order needs only enough resolution to
-    separate row groups, not row-level ordering; the per-row bucket lookup is
-    a 2^bits-element filter, fine for a periodic rewrite job (NOT a query-
-    path expression).
+    The rewrite is the same one-shuffle repartition the linear compaction
+    uses. ``bits=8`` (256 buckets/dimension) keeps the boundary array a
+    small literal — z-order needs only enough resolution to separate row
+    groups, not row-level ordering.
     """
-    from pyspark.sql import functions as F
-
-    n_buckets = 1 << bits
-    # Global bucket boundaries per column: approxQuantile on up to n_buckets
-    # cut points. Cheap relative to the rewrite (scan + fixed-size sketch).
-    bucketed = []
-    for c in zorder_columns:
-        qs = df.stat.approxQuantile(c, [i / n_buckets for i in range(1, n_buckets)], 0.001)
-        # searchsorted as a CASE-free expression: count boundaries <= value
-        # via a literal array + filter size (codegen, no UDF).
-        arr = F.array(*[F.lit(float(q)) for q in qs])
-        rank = F.size(F.filter(arr, lambda b: b <= F.col(c).cast("double")))
-        bucketed.append(rank.cast("long"))
-    z = zorder_value(bucketed, bits=bits)
+    z = zorder_key(df, zorder_columns, bits=bits)
     keys = [df[c] for c in PARTITION_COLUMNS if c in df.columns]
     base = df.repartition(*keys) if keys else df.repartition(files_per_partition)
     zsorted = base.sortWithinPartitions(z)

@@ -38,8 +38,6 @@ from observation_lakehouse_spark.transaction import (
     AtomicParquetTable,
     change_files,
     partition_values,
-    snapshot_files,
-    snapshot_of,
 )
 
 PARTITION_COLS = ("data_set_id", "problem_id")
@@ -136,48 +134,23 @@ class ProblemResultMV:
         )
         self.table.commit_partitions(files, probs)
 
-    def _refresh_touched(
-        self, source: DataFrame, delta: DataFrame
+    def refresh_after_append(
+        self, source: DataFrame, appended: DataFrame
     ) -> list[tuple[str, str]]:
-        """Refresh the partitions ``delta``'s rows name; returns them.
-
-        A :meth:`~AtomicParquetTable.read_changes` delta names them in its
-        files' paths (:func:`_partitions_of_changes`), so it needs no job;
-        any other delta is probed with a ``distinct`` job over its partition
-        columns. Delta-refresh scope: the probe, the scoped recompute and the
-        stage write run with AQE off (AQE otherwise runs each exchange as its
-        own adaptive stage-job) at a width sized from file bytes instead of
-        the session width. The probe reads only the delta; the recompute
-        re-reads the touched source partitions WHOLE, so its width also
-        counts their files — a KB append into a GB partition must not
-        recompute at width 1. Non-file deltas fall back to full parallelism
-        (size unknown, not zero)."""
-        from observation_lakehouse_spark.plans.incremental import (
-            _refresh_scope,
-            _refresh_width,
-        )
-
-        touched = _partitions_of_changes(delta)
-        if touched is None:
-            with _refresh_scope(self.spark, _refresh_width(self.spark, delta)):
-                touched = [
-                    (r["data_set_id"], r["problem_id"])
-                    for r in delta.select(*PARTITION_COLS).distinct().collect()
-                ]
-        if touched:
-            width = _refresh_width(
-                self.spark, delta, files=_files_in_partitions(source, touched)
-            )
-            with _refresh_scope(self.spark, width):
-                self.refresh_problems(source, touched)
-        return touched
-
-    def refresh_after_append(self, source: DataFrame, appended: DataFrame) -> None:
         """The append hook: refresh exactly the partitions the appended rows
-        touch — read from the file paths of a ``read_changes`` delta, else
-        their distinct (data_set_id, problem_id) pairs, a few rows collected,
-        never data."""
-        self._refresh_touched(source, appended)
+        touch; returns them. A ``read_changes`` delta or a change feed names
+        them in its files' paths (:func:`_partitions_of_changes`), so it
+        needs no job; any other delta is probed with a ``distinct`` over its
+        partition columns — a few rows collected, never data. The probe and
+        the recompute run under the session's own confs."""
+        touched = _partitions_of_changes(appended)
+        if touched is None:
+            touched = [
+                (r["data_set_id"], r["problem_id"])
+                for r in appended.select(*PARTITION_COLS).distinct().collect()
+            ]
+        self.refresh_problems(source, touched)
+        return touched
 
     def refresh_from_change_feed(
         self,
@@ -190,18 +163,21 @@ class ProblemResultMV:
         full rebuild.
 
         The table's change feed (:meth:`~AtomicParquetTable.
-        read_change_feed` — insert AND retraction rows, both carrying the
-        partition columns) names exactly the (data_set_id, problem_id)
-        partitions any change touched; those partitions recompute from the
-        POST-change snapshot (per-problem locality makes partition-scoped
-        recompute the exact result-grain analogue of the counting algorithm
-        — a result row is not an invertible aggregate, so "subtract the
-        delta" has no meaning here, but "recompute the touched partition" is
-        just as incremental). A delete that emptied a problem recomputes to
-        no rows, so the partition-replace commit leaves it with no files.
-        Returns the touched pairs."""
+        read_change_feed` — insert AND retraction rows) records the files it
+        reads, whose ``k=v`` directories name every (data_set_id,
+        problem_id) partition any change touched, so finding them runs no
+        job. A row inserted and deleted inside the range still names its
+        partition: a safe over-approximation, since the recompute is exact.
+        Those partitions recompute from the POST-change snapshot
+        (per-problem locality makes partition-scoped recompute the exact
+        result-grain analogue of the counting algorithm — a result row is
+        not an invertible aggregate, so "subtract the delta" has no meaning
+        here, but "recompute the touched partition" is just as incremental).
+        A delete that emptied a problem recomputes to no rows, so the
+        partition-replace commit leaves it with no files. Returns the
+        touched pairs."""
         feed = source_table.read_change_feed(from_version, to_version)
-        return self._refresh_touched(source_table.read(), feed)
+        return self.refresh_after_append(source_table.read(), feed)
 
     def _built(self) -> AtomicParquetTable:
         if self.table is None:
@@ -223,10 +199,11 @@ class ProblemResultMV:
 
 
 def _partitions_of_changes(delta: DataFrame) -> list[tuple[str, str]] | None:
-    """The (data_set_id, problem_id) pairs a ``read_changes`` delta touches,
-    decoded from its files' ``k=v`` directories (no job); ``None`` for any
-    other delta, or when a file's path lacks either key or a key is not a
-    string column (a decoded directory is a string)."""
+    """The (data_set_id, problem_id) pairs a ``read_changes`` delta or a
+    ``read_change_feed`` feed touches, decoded from its files' ``k=v``
+    directories (no job); ``None`` for any other delta, or when a file's
+    path lacks either key or a key is not a string column (a decoded
+    directory is a string)."""
     files = change_files(delta)
     if files is None or any(
         not isinstance(delta.schema[c].dataType, StringType) for c in PARTITION_COLS
@@ -239,25 +216,6 @@ def _partitions_of_changes(delta: DataFrame) -> list[tuple[str, str]] | None:
             return None
         pairs[tuple(pv[c] for c in PARTITION_COLS)] = None
     return list(pairs)
-
-
-def _files_in_partitions(
-    df: DataFrame, probs: list[tuple[str, str]]
-) -> list[str]:
-    """``df``'s input files that lie in the given (data_set_id, problem_id)
-    partitions, matched on their decoded ``k=v`` directories — no job. A
-    whole-snapshot read's files come from its manifest; any other frame's
-    from ``inputFiles()`` (one py4j call per file). A filtered frame's
-    ``inputFiles()`` is the UNPRUNED listing, so the selection is by path
-    here."""
-    wanted = set(probs)
-    snap = snapshot_of(df)
-    files = snapshot_files(snap) if snap is not None else df.inputFiles()
-    return [
-        f
-        for f in files
-        if tuple(partition_values(f).get(c) for c in PARTITION_COLS) in wanted
-    ]
 
 
 def srm_map_mv_compute(observations: DataFrame) -> DataFrame:

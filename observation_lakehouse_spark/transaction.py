@@ -116,16 +116,19 @@ def snapshot_of(df: DataFrame) -> SnapshotId | None:
     return _SNAPSHOT_READS.get(df)
 
 
-# frame returned by read_changes -> the manifest-relative data files it scans;
-# weak keys, like _SNAPSHOT_READS
+# frame returned by read_changes / read_change_feed -> the manifest-relative
+# data files it reads; weak keys, like _SNAPSHOT_READS
 _CHANGE_READS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def change_files(df: DataFrame) -> list[str] | None:
-    """The data files (manifest-relative) ``df`` scans iff it is a frame
-    :meth:`AtomicParquetTable.read_changes` returned, else ``None``: the
-    files' ``k=v`` directories name every partition the delta touches,
-    without a job."""
+    """The data files (manifest-relative) ``df`` reads iff it is a frame
+    :meth:`AtomicParquetTable.read_changes` or :meth:`~AtomicParquetTable.
+    read_change_feed` returned, else ``None``: the files' ``k=v``
+    directories name every partition the delta touches, without a job. A
+    feed's files are the ones the range added plus the base files its new
+    deletion vectors hit, so a row inserted and deleted inside the range
+    still names its partition."""
     return _CHANGE_READS.get(df)
 
 
@@ -154,19 +157,6 @@ def _log_versions(directory: Path, prefix: str) -> list[int]:
     the one scan both versioned logs find their head with."""
     names = [n for n in os.listdir(directory) if n.startswith(prefix) and n.endswith(".json")]
     return sorted(int(v) for n in names if (v := n[len(prefix) : -len(".json")]).isdigit())
-
-
-def _read_manifest(location: Path, version: int) -> dict:
-    if version == 0:
-        return {"version": 0, "files": [], "commits": {}}
-    return json.loads((location / "_manifests" / f"v{version}.json").read_text())
-
-
-def snapshot_files(snap: SnapshotId) -> list[str]:
-    """Absolute paths of the data files snapshot ``snap`` lists, from its
-    manifest — no Spark call."""
-    location = Path(snap.location)
-    return [str(location / "data" / f) for f in _read_manifest(location, snap.version)["files"]]
 
 
 class CommitConflict(RuntimeError):
@@ -377,7 +367,9 @@ class AtomicParquetTable:
         return vs[-1] if vs else 0
 
     def _manifest(self, version: int) -> dict:
-        return _read_manifest(self.location, version)
+        if version == 0:
+            return {"version": 0, "files": [], "commits": {}}
+        return json.loads((self.manifest_dir / f"v{version}.json").read_text())
 
     def _stamp(self, version: int) -> tuple[int, int] | None:
         """(inode, mtime) of snapshot ``version``'s manifest; raises
@@ -1495,7 +1487,9 @@ class AtomicParquetTable:
         Same append+delete-only restriction as :meth:`read_changes`: a
         replace/rollback inside the range removes files, the delta stops
         being expressible, and this raises (diff two snapshot reads
-        instead).
+        instead). The frame's file list — the added files plus the base
+        files hit by new deletion vectors — is recorded
+        (:func:`change_files`).
         """
         from pyspark.sql import functions as F
 
@@ -1516,6 +1510,7 @@ class AtomicParquetTable:
         base_sc = set(self._delete_sidecars(base_m))
         new_sc = [s for s in self._delete_sidecars(to_m) if s not in base_sc]
         dels = None
+        affected = []
         if new_sc:
             dv = self.spark.read.schema("file string, pos bigint").parquet(
                 *[str(self._deletes_dir / s) for s in new_sc]
@@ -1539,6 +1534,7 @@ class AtomicParquetTable:
             out = out.unionByName(tag(ins, "insert"))
         if dels is not None:
             out = out.unionByName(tag(dels, "delete"))
+        _CHANGE_READS[out] = added + affected
         return out
 
     def add_column(self, column: str, spark_type: str) -> None:
@@ -1713,30 +1709,16 @@ class AtomicParquetTable:
         else:
             df = df.coalesce(max(1, -(-total // target_file_bytes)))
         if zorder_by:
-            from observation_lakehouse_spark.plans.maintenance import zorder_value
+            from observation_lakehouse_spark.plans.maintenance import zorder_key
 
-            # Delta OPTIMIZE ZORDER BY: rank-bucket each z column with a
-            # global approx-quantile sketch, Morton-interleave, sort within
-            # the write tasks — row groups become min/max-prunable on EVERY
-            # z dimension (plans/maintenance.zorder_partitions, same math).
-            n_buckets = 1 << zorder_bits
-            bucketed = []
-            for c in zorder_by:
-                qs = df.stat.approxQuantile(
-                    c, [i / n_buckets for i in range(1, n_buckets)], 0.001
-                )
-                arr = F.array(*[F.lit(float(q)) for q in qs])
-                bucketed.append(
-                    F.size(F.filter(arr, lambda b: b <= F.col(c).cast("double"))).cast(
-                        "long"
-                    )
-                )
-            # partition cols lead the sort: the partitioned writer requires
-            # rows grouped by partition within a task, and a sort it injects
-            # itself would destroy the z clustering
+            # Delta OPTIMIZE ZORDER BY: sort within the write tasks by the
+            # Morton key, so row groups become min/max-prunable on EVERY z
+            # dimension. Partition cols lead the sort: the partitioned
+            # writer requires rows grouped by partition within a task, and
+            # a sort it injects itself would destroy the z clustering.
             df = df.sortWithinPartitions(
                 *[F.col(c) for c in self.partition_by],
-                zorder_value(bucketed, bits=zorder_bits),
+                zorder_key(df, zorder_by, bits=zorder_bits),
             )
         new_files = self.stage(df)
         version = self._commit(

@@ -164,10 +164,10 @@ def _jobs(spark, group, fn):
 
 def test_refresh_from_read_changes_runs_no_probe_job(spark, observations, tmp_path):
     """A ``read_changes`` delta names the partitions it touches in its files'
-    paths, so an MV refresh from it runs one job fewer than the same
-    refresh from an equal plain frame, whose touched partitions need the
-    ``distinct`` probe. The served rows still equal the direct operator,
-    for a problem id the partitioned writer escapes too."""
+    paths, so an MV refresh from it runs exactly the ``distinct`` probe's
+    jobs fewer than the same refresh from an equal plain frame, whose
+    touched partitions need the probe. The served rows still equal the
+    direct operator, for a problem id the partitioned writer escapes too."""
     from observation_lakehouse_spark.plans.result_mv import PARTITION_COLS, _partitions_of_changes
     from observation_lakehouse_spark.transaction import AtomicParquetTable
 
@@ -183,6 +183,9 @@ def test_refresh_from_read_changes_runs_no_probe_job(spark, observations, tmp_pa
     touched = [("DSA", "p:9/01"), ("DSA", "p_001"), ("DSA", "p_900")]
     assert sorted(_partitions_of_changes(delta)) == touched
     assert _partitions_of_changes(delta.select("*")) is None
+    probe = _jobs(
+        spark, "probe", lambda: delta.select(*PARTITION_COLS).distinct().collect()
+    )
     computes = {"srm": srm_map_mv_compute, "clu": clustering_mv_compute}
     for name, compute in computes.items():
         jobs = {}
@@ -194,7 +197,48 @@ def test_refresh_from_read_changes_runs_no_probe_job(spark, observations, tmp_pa
             )
             for _, pid in touched + [("DSA", "p_000")]:
                 _assert_serve_matches({name: mv}, src.read(), None, None, [pid])
-        assert jobs["changes"] == jobs["frame"] - 1, (name, jobs)
+        assert jobs["changes"] == jobs["frame"] - probe, (name, jobs, probe)
+
+
+def test_refresh_from_change_feed_runs_no_probe_job(spark, observations, tmp_path):
+    """A change feed records the files it reads: the ones its range added
+    and the base files its new deletion vectors hit. Their paths name the
+    touched partitions, so a feed refresh runs exactly the ``distinct``
+    probe's jobs fewer than the same refresh from ``feed.select("*")``, and
+    serves rows equal to the direct operator."""
+    from observation_lakehouse_spark.plans.result_mv import PARTITION_COLS, _partitions_of_changes
+    from observation_lakehouse_spark.transaction import AtomicParquetTable
+
+    src = AtomicParquetTable(
+        spark, str(tmp_path / "obs"), schema=OBSERVATIONS_SCHEMA, partition_by=PARTITION_COLS
+    )
+    src.append(observations)
+    v = src.latest_version()
+    src.append(spark.createDataFrame(_appended_rows(), OBSERVATIONS_SCHEMA))
+    src.delete_where("problem_id = 'p_000' AND implementation_id LIKE 'impl_00%'")
+    feed = src.read_change_feed(v)
+    touched = [("DSA", "p_000"), ("DSA", "p_001"), ("DSA", "p_900")]
+    assert sorted(_partitions_of_changes(feed)) == touched
+    assert _partitions_of_changes(feed.select("*")) is None
+    probe = _jobs(
+        spark, "feed-probe", lambda: feed.select(*PARTITION_COLS).distinct().collect()
+    )
+    refreshes = {
+        "feed": lambda mv: mv.refresh_from_change_feed(src, v),
+        "frame": lambda mv: mv.refresh_after_append(
+            src.read(), src.read_change_feed(v).select("*")
+        ),
+    }
+    jobs = {}
+    for kind, refresh in refreshes.items():
+        mv = ProblemResultMV(spark, str(tmp_path / f"srm_{kind}"), srm_map_mv_compute)
+        mv.refresh_full(src.read(version=v))
+        got = []
+        jobs[kind] = _jobs(spark, f"feed-refresh-{kind}", lambda: got.extend(refresh(mv)))
+        assert sorted(got) == touched, kind
+        for _, pid in touched + [("DSA", "p_002")]:
+            _assert_serve_matches({"srm": mv}, src.read(), None, None, [pid])
+    assert jobs["feed"] == jobs["frame"] - probe, (jobs, probe)
 
 
 def test_clustering_mv_keeps_data_sets_sharing_a_problem_id_apart(spark, tmp_path):
@@ -299,60 +343,35 @@ def _hex_source(spark, tmp_path):
     return src, rows
 
 
-def test_refresh_width_counts_touched_source_partitions(spark, tmp_path):
-    """A tiny append into a LARGE partition recomputes that whole partition,
-    so its refresh width is sized from the partition's files, not the
-    delta's; a tiny append into a tiny partition stays at width 1."""
+def test_refresh_runs_under_session_confs(spark, tmp_path):
+    """A refresh sets no conf: ``compute`` sees the session's own adaptive
+    execution and shuffle width, whether the append lands in a large or a
+    tiny partition, and the session's values are unchanged afterwards."""
     src, rows = _hex_source(spark, tmp_path)
     src.append(rows("p_big", 0, 40_000).unionByName(rows("p_small", 0, 10)))
-    widths = []
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    session = [spark.conf.get(k) for k in keys]
+    seen = []
 
     def compute(df):
-        widths.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        seen.append([spark.conf.get(k) for k in keys])
         return df.groupBy("data_set_id", "problem_id").agg(
             F.count(F.lit(1)).alias("n")
         )
 
     mv = ProblemResultMV(spark, str(tmp_path / "mv"), compute)
     mv.refresh_full(src.read())
-    for pid, expect_wide in (("p_big", True), ("p_small", False)):
+    for pid in ("p_big", "p_small"):
         v = src.latest_version()
         src.append(rows(pid, 10**6, 1))
-        widths.clear()
+        seen.clear()
         mv.refresh_after_append(src.read(), src.read_changes(v))
-        assert len(widths) == 1 and (widths[0] > 1) == expect_wide, (pid, widths)
+        assert seen == [session], (pid, seen)
+        assert [spark.conf.get(k) for k in keys] == session, pid
     assert {r["problem_id"]: r["n"] for r in mv.read().collect()} == {
         "p_big": 40_001,
         "p_small": 11,
     }
-
-
-def test_refresh_width_from_manifest_equals_input_files(spark, tmp_path):
-    """A whole-snapshot source's touched-partition files come from its
-    manifest; a derived frame of the same snapshot lists them through
-    ``inputFiles()``. Both select the same files, so the refresh width is
-    unchanged."""
-    import re
-
-    from observation_lakehouse_spark.plans.incremental import _refresh_width
-    from observation_lakehouse_spark.plans.result_mv import _files_in_partitions
-    from observation_lakehouse_spark.transaction import snapshot_of
-
-    src, rows = _hex_source(spark, tmp_path)
-    src.append(rows("p_big", 0, 40_000).unionByName(rows("p_small", 0, 10)))
-    src.append(rows("p_big", 10**6, 5).unionByName(rows("p_other", 0, 5)))
-    snap = src.read()
-    derived = snap.select("*")
-    assert snapshot_of(snap) is not None and snapshot_of(derived) is None
-    delta = src.read_changes(1)
-    for touched in ([("DSA", "p_big")], [("DSA", "p_small"), ("DSA", "p_other")]):
-        manifest = _files_in_partitions(snap, touched)
-        listed = _files_in_partitions(derived, touched)
-        norm = lambda fs: sorted(re.sub("^file:/+", "/", f) for f in fs)  # noqa: E731
-        assert manifest and norm(manifest) == norm(listed), touched
-        assert _refresh_width(spark, delta, files=manifest) == _refresh_width(
-            spark, delta, files=listed
-        ), touched
 
 
 def test_refresh_problems_empty_is_noop(spark, observations, mv_setup):
